@@ -332,7 +332,7 @@ _GOLDEN_TABLES: list[tuple[str, str, str, str, bool]] = [
     ("place_point_counts", "place", "place_point", "point", False),
 ]
 
-# combined_point builders live under their own layer key; map to the family
+# combined_point tables live under their own layer key; map to the family
 # table used for expectations
 _GOLDEN_FAM_KEY = {
     "building_combined_point": "building",
@@ -349,10 +349,8 @@ _GOLDEN_FAM_BY_QUERY = {
 def q_tags_geomtype_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """tags escape-hatch table: every mixed row has tags after cleaning, so
     counts reduce to the geometry split."""
-    from pgosm_flex_spark.layers.registry import LAYER_BUILDERS
-
     osm = td.derived_osm_objects_mixed(spark, sf_dir)
-    t = LAYER_BUILDERS["tags"](osm)["tags"]
+    t = build_layer_tables(osm)["tags"]
     return t.groupBy("geom_type").agg(F.count(F.lit(1)).alias("n")).orderBy("geom_type")
 
 
@@ -360,7 +358,7 @@ def q_layer_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-scan layer dispatch (layers/router.py): ONE pass evaluates all
     44 table-membership predicates per row and explodes the matches — the
     at-scale alternative to unioning 44 per-table scans. Totals must equal
-    the per-table builders' row counts (also pinned by tests/test_router.py)."""
+    build_layer_tables' per-table row counts (also pinned by tests/test_router.py)."""
     from pgosm_flex_spark.layers.router import route_layer_ids
 
     osm = td.derived_osm_objects_mixed(spark, sf_dir)
@@ -409,15 +407,11 @@ def _q_golden_group(entries: list[tuple[str, str, str, str, bool]]):
     from functools import reduce
 
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pgosm_flex_spark.layers.registry import LAYER_BUILDERS
-
         osm = td.derived_osm_objects_mixed(spark, sf_dir)
-        built: dict[str, dict[str, DataFrame]] = {}
+        tables = build_layer_tables(osm)
         parts = []
-        for _key, layer, table, _geom, with_subtype in entries:
-            if layer not in built:
-                built[layer] = LAYER_BUILDERS[layer](osm)
-            df = built[layer][table]
+        for _key, _layer, table, _geom, with_subtype in entries:
+            df = tables[table]
             sub = (
                 F.col("osm_subtype").cast("string")
                 if with_subtype
@@ -1030,10 +1024,8 @@ def q_qc_tag_suggestions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """QC lint-rule union (U4, /root/reference/db/qc/osm_tag_suggestions.sql)
     over the mixed derived input."""
     from pgosm_flex_spark.layers.qc import qc_tag_suggestions
-    from pgosm_flex_spark.layers.registry import LAYER_BUILDERS
-
     osm = td.derived_osm_objects_mixed(spark, sf_dir)
-    tags_tbl = LAYER_BUILDERS["tags"](osm)["tags"]
+    tags_tbl = build_layer_tables(osm)["tags"]
     return (
         qc_tag_suggestions(tags_tbl)
         .select("osm_id", "geom_type", "suggestion", "osm_url")

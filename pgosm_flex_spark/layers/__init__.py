@@ -1,6 +1,5 @@
 from pgosm_flex_spark.layers.registry import (  # noqa: F401
     LAYERSETS,
-    TABLES,
     build_layer_tables,
     layerset_layers,
     resolve_layerset_path,

@@ -2,11 +2,20 @@
 
 The reference streams every OSM object through chained per-layer Lua callbacks
 (`process_node/way/relation`, e.g. /root/reference/flex-config/style/road.lua:250-284)
-that filter on tags and insert projected rows into typed tables. Here each of
-the 20 layers is a pure function ``DataFrame → {table_name: DataFrame}`` built
-from native column expressions over one shared scan: Spark caches the single
-input pass and Catalyst pushes each layer's first-level key predicate into the
-source scan. No callbacks, no per-object hops.
+that filter on tags and insert projected rows into typed tables, one filter
+and one projection per table. Here each of the 44 tables of the 20 layers is
+declared exactly once, in :func:`_table_spec`: a membership predicate (a
+boolean Column over the osm-objects frame) and an ordered projection (output
+column → Column), both native column expressions. Everything else derives
+from that spec:
+
+- :func:`build_layer_tables` — one DataFrame per table,
+  ``osm.filter(pred).select(cols)``; callers cache the shared input and
+  Catalyst pushes each predicate into its scan.
+- :func:`layer_table_predicates` / :func:`layer_table_columns` — the spec
+  itself, which layers/router.py fuses into ONE routed pass over all tables.
+
+No callbacks, no per-object hops.
 
 Input contract (the "osm objects" frame):
 
@@ -27,8 +36,6 @@ reference's INI gate (/root/reference/flex-config/layerset.lua:26-28).
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
-from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -43,23 +50,23 @@ T = sc.t  # tags[key] accessor
 # geometry routing predicates (SURVEY.md P19)
 # ---------------------------------------------------------------------------
 
-def _is_node(df: DataFrame) -> Column:
+def _is_node() -> Column:
     return F.col("geom_type") == "N"
 
 
-def _is_way(df: DataFrame) -> Column:
+def _is_way() -> Column:
     return F.col("geom_type") == "W"
 
 
-def _is_rel(df: DataFrame) -> Column:
+def _is_rel() -> Column:
     return F.col("geom_type") == "R"
 
 
-def _closed(df: DataFrame) -> Column:
+def _closed() -> Column:
     return F.coalesce(F.col("is_closed"), F.lit(False))
 
 
-def _rel_is_poly(df: DataFrame) -> Column:
+def _rel_is_poly() -> Column:
     """Relations kept only when type ∈ {multipolygon, boundary}
     (/root/reference/flex-config/style/poi.lua:197-212 et al.)."""
     return T(F.col("tags"), "type").isin("multipolygon", "boundary")
@@ -68,32 +75,16 @@ def _rel_is_poly(df: DataFrame) -> Column:
 _BASE_COLS = ["osm_id", "geom_type", "lon", "lat", "geom_wkb"]
 
 
-def _project(df: DataFrame, extra: dict[str, Column], with_members: bool = False) -> DataFrame:
-    cols = [F.col(c) for c in _BASE_COLS]
-    if with_members:
-        cols.append(F.col("member_ids"))
-    cols.extend(expr.alias(name) for name, expr in extra.items())
-    return df.select(*cols)
-
-
-@dataclass(frozen=True)
-class TableSpec:
-    layer: str
-    name: str  # e.g. "road_line"
-    kind: str  # point | line | polygon | combined_point
-    build: Callable[[DataFrame], DataFrame] = field(repr=False, compare=False, default=None)
-
-
 # ---------------------------------------------------------------------------
 # place (/root/reference/flex-config/style/place.lua:60-176)
 # ---------------------------------------------------------------------------
 
-def _place_filter(df: DataFrame) -> Column:
+def _place_filter() -> Column:
     t = F.col("tags")
     return T(t, "place").isNotNull() | T(t, "boundary").isNotNull() | T(t, "admin_level").isNotNull()
 
 
-def _place_cols(df: DataFrame) -> dict[str, Column]:
+def _place_cols(name: Column) -> dict[str, Column]:
     t = F.col("tags")
     osm_type = (
         F.when(T(t, "place").isNotNull(), T(t, "place"))
@@ -104,23 +95,7 @@ def _place_cols(df: DataFrame) -> dict[str, Column]:
         "osm_type": osm_type,
         "boundary": T(t, "boundary"),
         "admin_level": sc.parse_admin_level(T(t, "admin_level")),
-        "name": sc.get_name(t),
-    }
-
-
-def build_place(osm: DataFrame) -> dict[str, DataFrame]:
-    # geometry test first throughout the builders: one column comparison
-    # short-circuits the tag logic for rows of the wrong geometry class
-    member = _place_filter(osm)
-    return {
-        "place_point": _project(osm.filter(_is_node(osm) & member), _place_cols(osm)),
-        "place_line": _project(osm.filter(_is_way(osm) & ~_closed(osm) & member), _place_cols(osm)),
-        # closed ways AND all matching relations land in place_polygon
-        # (place.lua:113-131, 133-175 — relations get member_ids)
-        "place_polygon": _project(
-            osm.filter(((_is_way(osm) & _closed(osm)) | _is_rel(osm)) & member),
-            _place_cols(osm), with_members=True
-        ),
+        "name": name,
     }
 
 
@@ -129,9 +104,9 @@ def build_place(osm: DataFrame) -> dict[str, DataFrame]:
 # road_major.lua)
 # ---------------------------------------------------------------------------
 
-def _road_common(t: Column) -> dict[str, Column]:
+def _road_common(t: Column, name: Column) -> dict[str, Column]:
     return {
-        "name": sc.get_name(t),
+        "name": name,
         "osm_type": T(t, "highway"),
         "ref": sc.get_ref(t),
         "maxspeed": sc.parse_speed(T(t, "maxspeed")),
@@ -151,33 +126,12 @@ def _road_routable(t: Column) -> dict[str, Column]:
     }
 
 
-def _road_is_area(df: DataFrame) -> Column:
+def _road_is_area() -> Column:
     """area='yes' or indoor='room' routes ways to road_polygon (road.lua:141-143)."""
     t = F.col("tags")
     # coalesce to false: absent tags give NULL, and filter(~NULL) would drop
     # every normal road under SQL three-valued logic
     return F.coalesce((T(t, "area") == "yes") | (T(t, "indoor") == "room"), F.lit(False))
-
-
-def build_road(osm: DataFrame) -> dict[str, DataFrame]:
-    t = F.col("tags")
-    member = T(t, "highway").isNotNull()
-    point_cols = {**_road_common(t), "oneway": sc.parse_oneway(T(t, "oneway"))}
-    line_cols = {**_road_common(t), "oneway": sc.parse_oneway(T(t, "oneway")), **_road_routable(t)}
-    poly_cols = {**_road_common(t), **_road_routable(t)}
-    wr = osm.filter((_is_way(osm) | _is_rel(osm)) & member)
-    return {
-        "road_point": _project(osm.filter(_is_node(osm) & member), point_cols),
-        "road_line": _project(wr.filter(~_road_is_area(wr)), line_cols, with_members=True),
-        "road_polygon": _project(wr.filter(_road_is_area(wr)), poly_cols, with_members=True),
-    }
-
-
-def build_road_major(osm: DataFrame) -> dict[str, DataFrame]:
-    """road_major: line subset where major_road(highway)
-    (/root/reference/flex-config/style/road_major.lua)."""
-    lines = build_road(osm)["road_line"]
-    return {"road_major": lines.filter(F.col("major"))}
 
 
 # ---------------------------------------------------------------------------
@@ -199,7 +153,7 @@ _POI_MAN_MADE = [
 _POI_NATURAL = ["peak", "glacier", "reef", "hot_spring", "bay"]
 
 
-def _poi_filter(df: DataFrame) -> Column:
+def _poi_filter(name: Column) -> Column:
     t = F.col("tags")
     first = sc.has_any_key(t, POI_FIRST_LEVEL_KEYS)
     # second_level_tag_check_poi (poi_helpers.lua:104-121)
@@ -208,14 +162,12 @@ def _poi_filter(df: DataFrame) -> Column:
     # operator (one map probe) before the get_name chain: OR is commutative
     # (incl. three-valued) and evaluates left-to-right, so most building
     # rows never reach the name-coalesce / last-ditch scan
-    building_ok = T(t, "building").isNull() | T(t, "operator").isNotNull() | (
-        sc.get_name(t) != ""
-    )
+    building_ok = T(t, "building").isNull() | T(t, "operator").isNotNull() | (name != "")
     man_made_ok = T(t, "man_made").isNull() | T(t, "man_made").isin(_POI_MAN_MADE)
     return first & natural_ok & landuse_ok & building_ok & man_made_ok
 
 
-def _poi_cols(df: DataFrame) -> dict[str, Column]:
+def _poi_cols(name: Column) -> dict[str, Column]:
     t = F.col("tags")
     # priority CASE (poi_helpers.lua:124-141): shop > amenity > building >
     # leisure > landuse > natural > man_made > tourism > historic > Unknown
@@ -239,7 +191,7 @@ def _poi_cols(df: DataFrame) -> dict[str, Column]:
     return {
         "osm_type": expr_type,
         "osm_subtype": expr_sub,
-        "name": sc.get_name(t),
+        "name": name,
         "housenumber": T(t, "addr:housenumber"),
         "street": T(t, "addr:street"),
         "city": T(t, "addr:city"),
@@ -247,22 +199,6 @@ def _poi_cols(df: DataFrame) -> dict[str, Column]:
         "postcode": T(t, "addr:postcode"),
         "address": sc.get_address(t),
         "operator": T(t, "operator"),
-    }
-
-
-def build_poi(osm: DataFrame) -> dict[str, DataFrame]:
-    member = _poi_filter(osm)
-    cols = _poi_cols(osm)
-    return {
-        "poi_point": _project(osm.filter(_is_node(osm) & member), cols),
-        "poi_line": _project(osm.filter(_is_way(osm) & ~_closed(osm) & member), cols),
-        "poi_polygon": _project(
-            osm.filter(
-                ((_is_way(osm) & _closed(osm)) | (_is_rel(osm) & _rel_is_poly(osm))) & member
-            ),
-            cols,
-            with_members=True,
-        ),
     }
 
 
@@ -306,12 +242,12 @@ def _address_only(t: Column) -> Column:
     return no_excluded & _has_key_prefix(t, "addr:")
 
 
-def _building_filter(df: DataFrame) -> Column:
+def _building_filter() -> Column:
     t = F.col("tags")
     return sc.has_any_key(t, BUILDING_FIRST_LEVEL_KEYS) | _address_only(t)
 
 
-def _building_cols(df: DataFrame) -> dict[str, Column]:
+def _building_cols(name: Column) -> dict[str, Column]:
     t = F.col("tags")
     osm_type = (
         F.when(T(t, "building").isNotNull(), F.lit("building"))
@@ -334,7 +270,7 @@ def _building_cols(df: DataFrame) -> dict[str, Column]:
     return {
         "osm_type": osm_type,
         "osm_subtype": osm_subtype,
-        "name": sc.get_name(t),
+        "name": name,
         "levels": T(t, "building:levels").try_cast("int"),
         "height": sc.parse_to_meters(F.coalesce(T(t, "height"), T(t, "building:height"))),
         "housenumber": T(t, "addr:housenumber"),
@@ -348,21 +284,6 @@ def _building_cols(df: DataFrame) -> dict[str, Column]:
     }
 
 
-def build_building(osm: DataFrame) -> dict[str, DataFrame]:
-    member = _building_filter(osm)
-    cols = _building_cols(osm)
-    return {
-        "building_point": _project(osm.filter(_is_node(osm) & member), cols),
-        "building_polygon": _project(
-            osm.filter(
-                ((_is_way(osm) & _closed(osm)) | (_is_rel(osm) & _rel_is_poly(osm))) & member
-            ),
-            cols,
-            with_members=True,
-        ),
-    }
-
-
 # ---------------------------------------------------------------------------
 # water (/root/reference/flex-config/style/water.lua:67-180)
 # ---------------------------------------------------------------------------
@@ -373,13 +294,13 @@ WATER_NATURAL_VALUES = [
 ]
 
 
-def _water_cols(df: DataFrame) -> dict[str, Column]:
+def _water_cols(name: Column) -> dict[str, Column]:
     t = F.col("tags")
     is_nat = T(t, "natural").isin(WATER_NATURAL_VALUES)
     return {
         "osm_type": F.when(is_nat, F.lit("natural")).otherwise(F.lit("waterway")),
         "osm_subtype": F.when(is_nat, T(t, "natural")).otherwise(T(t, "waterway")),
-        "name": sc.get_name(t),
+        "name": name,
         "layer": sc.parse_layer_value(T(t, "layer")),
         "tunnel": T(t, "tunnel"),
         "bridge": T(t, "bridge"),
@@ -387,29 +308,11 @@ def _water_cols(df: DataFrame) -> dict[str, Column]:
     }
 
 
-def build_water(osm: DataFrame) -> dict[str, DataFrame]:
-    t = F.col("tags")
-    # natural-in-set takes priority; else waterway key (water.lua:73-143)
-    member = T(t, "natural").isin(WATER_NATURAL_VALUES) | T(t, "waterway").isNotNull()
-    cols = _water_cols(osm)
-    return {
-        "water_point": _project(osm.filter(_is_node(osm) & member), cols),
-        "water_line": _project(osm.filter(_is_way(osm) & ~_closed(osm) & member), cols),
-        "water_polygon": _project(
-            osm.filter(
-                ((_is_way(osm) & _closed(osm)) | (_is_rel(osm) & _rel_is_poly(osm))) & member
-            ),
-            cols,
-            with_members=True,
-        ),
-    }
-
-
 # ---------------------------------------------------------------------------
 # amenity (/root/reference/flex-config/style/amenity.lua:76-110)
 # ---------------------------------------------------------------------------
 
-def _amenity_cols(df: DataFrame) -> dict[str, Column]:
+def _amenity_cols(name: Column) -> dict[str, Column]:
     t = F.col("tags")
     amenity = T(t, "amenity")
     osm_type = (
@@ -425,7 +328,7 @@ def _amenity_cols(df: DataFrame) -> dict[str, Column]:
     return {
         "osm_type": osm_type,
         "osm_subtype": osm_subtype,
-        "name": sc.get_name(t),
+        "name": name,
         "housenumber": T(t, "addr:housenumber"),
         "street": T(t, "addr:street"),
         "city": T(t, "addr:city"),
@@ -446,8 +349,8 @@ def _amenity_member(t: Column) -> Column:
     NULL``; each disjunct implies its key exists, making the has_any_key
     conjunct redundant. The flat form generates a fraction of the CASE
     chain's bytecode (the 44-branch union pays codegen size 44×; huge
-    generated methods are never JIT-compiled). Pinned equal to the builder
-    output by tests/test_router.py."""
+    generated methods are never JIT-compiled). Pinned equal to the CASE
+    form, like the other flat member helpers, by tests/test_router.py."""
     # the has_any_key gate is logically redundant (each disjunct implies
     # its key exists) but is the per-row fast path: one arrays_overlap pass
     # over the key list short-circuits the per-key element_at probes for
@@ -457,25 +360,6 @@ def _amenity_member(t: Column) -> Column:
         | (T(t, "bench") == "yes")
         | T(t, "brewery").isNotNull()
     )
-
-
-def build_amenity(osm: DataFrame) -> dict[str, DataFrame]:
-    t = F.col("tags")
-    member = _amenity_member(t)
-    cols = _amenity_cols(osm)
-    # geometry test first: one column comparison short-circuits the tag
-    # logic for rows of the wrong geometry class (most rows, on any mix)
-    return {
-        "amenity_point": _project(osm.filter(_is_node(osm) & member), cols),
-        "amenity_line": _project(osm.filter(_is_way(osm) & ~_closed(osm) & member), cols),
-        "amenity_polygon": _project(
-            osm.filter(
-                ((_is_way(osm) & _closed(osm)) | (_is_rel(osm) & _rel_is_poly(osm))) & member
-            ),
-            cols,
-            with_members=True,
-        ),
-    }
 
 
 # ---------------------------------------------------------------------------
@@ -488,7 +372,7 @@ _SHOP_AMENITY_VALUES = [
 ]
 
 
-def _shop_cols(df: DataFrame) -> dict[str, Column]:
+def _shop_cols(name: Column) -> dict[str, Column]:
     t = F.col("tags")
     osm_type = (
         F.when(T(t, "shop").isNotNull(), F.lit("shop"))
@@ -503,7 +387,7 @@ def _shop_cols(df: DataFrame) -> dict[str, Column]:
     return {
         "osm_type": osm_type,
         "osm_subtype": osm_subtype,
-        "name": sc.get_name(t),
+        "name": name,
         "housenumber": T(t, "addr:housenumber"),
         "street": T(t, "addr:street"),
         "city": T(t, "addr:city"),
@@ -527,73 +411,11 @@ def _shop_member(t: Column) -> Column:
     )
 
 
-def build_shop(osm: DataFrame) -> dict[str, DataFrame]:
-    member = _shop_member(F.col("tags"))
-    cols = _shop_cols(osm)
-    return {
-        "shop_point": _project(osm.filter(_is_node(osm) & member), cols),
-        "shop_polygon": _project(
-            osm.filter(
-                ((_is_way(osm) & _closed(osm)) | (_is_rel(osm) & _rel_is_poly(osm))) & member
-            ),
-            cols,
-            with_members=True,
-        ),
-    }
-
-
-# ---------------------------------------------------------------------------
-# landuse / leisure (/root/reference/flex-config/style/{landuse,leisure}.lua)
-# ---------------------------------------------------------------------------
-
-def _single_key_layer(osm: DataFrame, key: str, prefix: str, extra: dict[str, Column] | None = None,
-                      has_line: bool = False, exclude_vals: list[str] | None = None) -> dict[str, DataFrame]:
-    t = F.col("tags")
-    member = T(t, key).isNotNull()
-    if exclude_vals:
-        member = member & ~T(t, key).isin(exclude_vals)
-    cols = {"osm_type": T(t, key), "name": sc.get_name(t)}
-    if extra:
-        cols.update(extra)
-    out = {
-        f"{prefix}_point": _project(osm.filter(_is_node(osm) & member), cols),
-        f"{prefix}_polygon": _project(
-            osm.filter(
-                ((_is_way(osm) & _closed(osm)) | (_is_rel(osm) & _rel_is_poly(osm))) & member
-            ),
-            cols,
-            with_members=True,
-        ),
-    }
-    if has_line:
-        out[f"{prefix}_line"] = _project(osm.filter(_is_way(osm) & ~_closed(osm) & member), cols)
-    return out
-
-
-def build_landuse(osm: DataFrame) -> dict[str, DataFrame]:
-    return _single_key_layer(osm, "landuse", "landuse")
-
-
-def build_leisure(osm: DataFrame) -> dict[str, DataFrame]:
-    return _single_key_layer(osm, "leisure", "leisure")
-
-
-def build_natural(osm: DataFrame) -> dict[str, DataFrame]:
-    """natural minus the water-layer values (natural.lua:56-77)."""
-    t = F.col("tags")
-    return _single_key_layer(
-        osm, "natural", "natural",
-        extra={"ele": sc.parse_to_meters(T(t, "ele"))},
-        has_line=True,
-        exclude_vals=WATER_NATURAL_VALUES,
-    )
-
-
 # ---------------------------------------------------------------------------
 # indoor (/root/reference/flex-config/style/indoor.lua:60-130)
 # ---------------------------------------------------------------------------
 
-def _indoor_cols(df: DataFrame) -> dict[str, Column]:
+def _indoor_cols(name: Column) -> dict[str, Column]:
     t = F.col("tags")
     return {
         "osm_type": (
@@ -602,7 +424,7 @@ def _indoor_cols(df: DataFrame) -> dict[str, Column]:
             .when(T(t, "entrance").isNotNull(), F.lit("entrance"))
             .otherwise(F.lit("unknown"))
         ),
-        "name": sc.get_name(t),
+        "name": name,
         "layer": sc.parse_layer_value(T(t, "layer")),
         "level": T(t, "level"),
         "room": T(t, "room"),
@@ -610,23 +432,6 @@ def _indoor_cols(df: DataFrame) -> dict[str, Column]:
         "door": T(t, "door"),
         "capacity": T(t, "capacity"),
         "highway": T(t, "highway"),
-    }
-
-
-def build_indoor(osm: DataFrame) -> dict[str, DataFrame]:
-    t = F.col("tags")
-    member = sc.has_any_key(t, ["indoor", "door", "entrance"])
-    cols = _indoor_cols(osm)
-    return {
-        "indoor_point": _project(osm.filter(_is_node(osm) & member), cols),
-        "indoor_line": _project(osm.filter(_is_way(osm) & ~_closed(osm) & member), cols),
-        "indoor_polygon": _project(
-            osm.filter(
-                ((_is_way(osm) & _closed(osm)) | (_is_rel(osm) & _rel_is_poly(osm))) & member
-            ),
-            cols,
-            with_members=True,
-        ),
     }
 
 
@@ -639,7 +444,7 @@ _INFRA_TOWER = ["tower", "communications_tower", "mast", "lighthouse", "flagpole
 _INFRA_TANK = ["silo", "storage_tank", "water_tower", "reservoir_covered"]
 
 
-def _infrastructure_cols(df: DataFrame) -> tuple[dict[str, Column], Column]:
+def _infrastructure_cols(name: Column) -> dict[str, Column]:
     t = F.col("tags")
     osm_type = (
         F.when((T(t, "amenity") == "fire_hydrant") | (T(t, "emergency") == "fire_hydrant"), F.lit("emergency"))
@@ -668,17 +473,15 @@ def _infrastructure_cols(df: DataFrame) -> tuple[dict[str, Column], Column]:
     demote = (osm_type == "emergency") & (osm_subtype == "no")
     osm_type = F.when(demote, F.lit("unknown")).otherwise(osm_type)
     osm_subtype = F.when(demote, F.lit(None).cast("string")).otherwise(osm_subtype)
-    cols = {
+    return {
         "osm_type": osm_type,
         "osm_subtype": osm_subtype,
-        "name": sc.get_name(t),
+        "name": name,
         "ele": sc.parse_to_meters(T(t, "ele")),
         "height": sc.parse_to_meters(F.coalesce(T(t, "height"), T(t, "building:height"))),
         "operator": T(t, "operator"),
         "material": T(t, "material"),
     }
-    keep = osm_type != "unknown"
-    return cols, keep
 
 
 def _infrastructure_member(t: Column) -> Column:
@@ -717,27 +520,11 @@ def _infrastructure_member(t: Column) -> Column:
     )
 
 
-def build_infrastructure(osm: DataFrame) -> dict[str, DataFrame]:
-    cols, _keep = _infrastructure_cols(osm)
-    member = _infrastructure_member(F.col("tags"))
-    return {
-        "infrastructure_point": _project(osm.filter(_is_node(osm) & member), cols),
-        "infrastructure_line": _project(osm.filter(_is_way(osm) & ~_closed(osm) & member), cols),
-        "infrastructure_polygon": _project(
-            osm.filter(
-                ((_is_way(osm) & _closed(osm)) | (_is_rel(osm) & _rel_is_poly(osm))) & member
-            ),
-            cols,
-            with_members=True,
-        ),
-    }
-
-
 # ---------------------------------------------------------------------------
 # public_transport (/root/reference/flex-config/style/public_transport.lua:92-135)
 # ---------------------------------------------------------------------------
 
-def _public_transport_cols(df: DataFrame) -> dict[str, Column]:
+def _public_transport_cols(name: Column) -> dict[str, Column]:
     t = F.col("tags")
     pairs = [("bus", "bus"), ("railway", "railway"), ("lightrail", "lightrail"),
              ("train", "train"), ("aerialway", "aerialway"), ("highway", "highway")]
@@ -749,7 +536,7 @@ def _public_transport_cols(df: DataFrame) -> dict[str, Column]:
     return {
         "osm_type": osm_type,
         "osm_subtype": osm_subtype,
-        "name": sc.get_name(t),
+        "name": name,
         "public_transport": T(t, "public_transport"),
         "layer": sc.parse_layer_value(T(t, "layer")),
         "ref": sc.get_ref(t),
@@ -758,23 +545,6 @@ def _public_transport_cols(df: DataFrame) -> dict[str, Column]:
         "surface": T(t, "surface"),
         "wheelchair": T(t, "wheelchair"),
         "wheelchair_desc": sc.get_wheelchair_desc(t),
-    }
-
-
-def build_public_transport(osm: DataFrame) -> dict[str, DataFrame]:
-    t = F.col("tags")
-    member = sc.has_any_key(t, ["public_transport", "aerialway", "railway"])
-    cols = _public_transport_cols(osm)
-    return {
-        "public_transport_point": _project(osm.filter(_is_node(osm) & member), cols),
-        "public_transport_line": _project(osm.filter(_is_way(osm) & ~_closed(osm) & member), cols),
-        "public_transport_polygon": _project(
-            osm.filter(
-                ((_is_way(osm) & _closed(osm)) | (_is_rel(osm) & _rel_is_poly(osm))) & member
-            ),
-            cols,
-            with_members=True,
-        ),
     }
 
 
@@ -792,7 +562,7 @@ _TRAFFIC_AMENITY = ["fuel", "parking", "bicycle_parking"]
 _TRAFFIC_FIRST_LEVEL_KEYS = ["highway", "railway", "barrier", "traffic_calming", "amenity", "noexit"]
 
 
-def _traffic_cols(df: DataFrame) -> tuple[dict[str, Column], Column]:
+def _traffic_cols() -> dict[str, Column]:
     t = F.col("tags")
     osm_type = (
         F.when(T(t, "highway").isin(_TRAFFIC_HIGHWAY), T(t, "highway"))
@@ -811,12 +581,12 @@ def _traffic_cols(df: DataFrame) -> tuple[dict[str, Column], Column]:
         .when(T(t, "amenity").isin(_TRAFFIC_AMENITY), T(t, "amenity"))
         .otherwise(F.lit(None).cast("string"))
     )
-    return {"osm_type": osm_type, "osm_subtype": osm_subtype}, osm_type
+    return {"osm_type": osm_type, "osm_subtype": osm_subtype}
 
 
 def _traffic_member(t: Column, with_noexit: bool = True) -> Column:
     """Row-set equivalent of ``has_any_key(first-level) &
-    _traffic_cols()[1].isNotNull()`` as a flat OR chain: the CASE is
+    _traffic_cols()['osm_type'].isNotNull()`` as a flat OR chain: the CASE is
     non-NULL iff one of its six conditions holds, and each condition
     implies its key exists. ``with_noexit=False`` additionally encodes the
     polygon rule ``osm_type != 'noexit'``: the CASE takes the FIRST
@@ -838,101 +608,34 @@ def _traffic_member(t: Column, with_noexit: bool = True) -> Column:
     return sc.has_any_key(t, _TRAFFIC_FIRST_LEVEL_KEYS) & member
 
 
-def build_traffic(osm: DataFrame) -> dict[str, DataFrame]:
-    t = F.col("tags")
-    cols, _osm_type = _traffic_cols(osm)
-    member = _traffic_member(t)
-    # nodes and ways only — traffic.lua defines no relation handler
-    # (traffic.lua:266-292 registers process_node/process_way exclusively);
-    # closed noexit ways are skipped ("noexit does not make sense for
-    # polygons", traffic.lua:242-256)
-    return {
-        "traffic_point": _project(osm.filter(_is_node(osm) & member), cols),
-        "traffic_line": _project(osm.filter(_is_way(osm) & ~_closed(osm) & member), cols),
-        "traffic_polygon": _project(
-            osm.filter(_is_way(osm) & _closed(osm) & _traffic_member(t, with_noexit=False)),
-            cols,
-            with_members=True,
-        ),
-    }
-
-
 # ---------------------------------------------------------------------------
-# tags / unitable escape hatches (/root/reference/flex-config/style/tags.lua,
-# unitable.lua)
+# table inventory + layersets
 # ---------------------------------------------------------------------------
 
-def build_tags(osm: DataFrame) -> dict[str, DataFrame]:
-    t = F.col("tags")
-    f = osm.filter(tagf.has_tags_after_clean(t))
-    out = f.select(
-        "osm_id", "geom_type",
-        tagf.clean_tags(t).alias("tags"),
-        sc.osm_url(F.col("geom_type"), F.col("osm_id")).alias("osm_url"),
-    )
-    return {"tags": out}
-
-
-def build_unitable(osm: DataFrame) -> dict[str, DataFrame]:
-    t = F.col("tags")
-    f = osm.filter(tagf.has_tags_after_clean(t))
-    out = f.select(
-        "osm_id", "geom_type", "lon", "lat", "geom_wkb",
-        tagf.clean_tags(t).alias("tags"),
-    )
-    return {"unitable": out}
-
-
-# ---------------------------------------------------------------------------
-# combined_point layers: polygons collapse to centroid so points+polygons
-# land in one table (/root/reference/flex-config/style/building_combined_point.lua:123,169)
-# — centroid itself is applied by operators.centroid_collapse (pandas UDF over
-# WKB); here we just union the souce rows with a marker of what needs collapsing.
-# ---------------------------------------------------------------------------
-
-def _combined(builder: Callable[[DataFrame], dict[str, DataFrame]], point_tbl: str,
-              poly_tbl: str, out_name: str) -> Callable[[DataFrame], dict[str, DataFrame]]:
-    def build(osm: DataFrame) -> dict[str, DataFrame]:
-        parts = builder(osm)
-        point = parts[point_tbl].withColumn("geom_src", F.lit("point"))
-        poly = parts[poly_tbl].withColumn("geom_src", F.lit("polygon"))
-        return {out_name: point.unionByName(poly, allowMissingColumns=True)}
-
-    return build
-
-
-build_building_combined_point = _combined(
-    build_building, "building_point", "building_polygon", "building_combined_point"
-)
-build_poi_combined_point = _combined(build_poi, "poi_point", "poi_polygon", "poi_combined_point")
-build_shop_combined_point = _combined(build_shop, "shop_point", "shop_polygon", "shop_combined_point")
-
-
-# ---------------------------------------------------------------------------
-# registry + layersets
-# ---------------------------------------------------------------------------
-
-LAYER_BUILDERS: dict[str, Callable[[DataFrame], dict[str, DataFrame]]] = {
-    "amenity": build_amenity,
-    "building": build_building,
-    "building_combined_point": build_building_combined_point,
-    "indoor": build_indoor,
-    "infrastructure": build_infrastructure,
-    "landuse": build_landuse,
-    "leisure": build_leisure,
-    "natural": build_natural,
-    "place": build_place,
-    "poi": build_poi,
-    "poi_combined_point": build_poi_combined_point,
-    "public_transport": build_public_transport,
-    "road": build_road,
-    "road_major": build_road_major,
-    "shop": build_shop,
-    "shop_combined_point": build_shop_combined_point,
-    "tags": build_tags,
-    "traffic": build_traffic,
-    "unitable": build_unitable,
-    "water": build_water,
+# layer → its tables, in output order (42 style tables + tags + unitable /
+# 20 layers; SURVEY.md §1.3). A ``_point``/``_line``/``_polygon`` suffix
+# names the table's geometry class in :func:`_table_spec`.
+_LAYER_TABLES: dict[str, list[str]] = {
+    "amenity": ["amenity_point", "amenity_line", "amenity_polygon"],
+    "building": ["building_point", "building_polygon"],
+    "building_combined_point": ["building_combined_point"],
+    "indoor": ["indoor_point", "indoor_line", "indoor_polygon"],
+    "infrastructure": ["infrastructure_point", "infrastructure_line", "infrastructure_polygon"],
+    "landuse": ["landuse_point", "landuse_polygon"],
+    "leisure": ["leisure_point", "leisure_polygon"],
+    "natural": ["natural_point", "natural_line", "natural_polygon"],
+    "place": ["place_point", "place_line", "place_polygon"],
+    "poi": ["poi_point", "poi_line", "poi_polygon"],
+    "poi_combined_point": ["poi_combined_point"],
+    "public_transport": ["public_transport_point", "public_transport_line", "public_transport_polygon"],
+    "road": ["road_point", "road_line", "road_polygon"],
+    "road_major": ["road_major"],
+    "shop": ["shop_point", "shop_polygon"],
+    "shop_combined_point": ["shop_combined_point"],
+    "tags": ["tags"],
+    "traffic": ["traffic_point", "traffic_line", "traffic_polygon"],
+    "unitable": ["unitable"],
+    "water": ["water_point", "water_line", "water_polygon"],
 }
 
 # /root/reference/flex-config/layerset/*.ini
@@ -947,38 +650,8 @@ LAYERSETS: dict[str, list[str]] = {
         "natural", "place", "poi", "public_transport", "road", "shop", "tags",
         "traffic", "water",
     ],
-    "everything": sorted(LAYER_BUILDERS),
+    "everything": sorted(_LAYER_TABLES),
 }
-
-# full table inventory (42 tables / 20 layers; SURVEY.md §1.3)
-_LAYER_TABLES: dict[str, list[tuple[str, str]]] = {
-    "amenity": [("amenity_point", "point"), ("amenity_line", "line"), ("amenity_polygon", "polygon")],
-    "building": [("building_point", "point"), ("building_polygon", "polygon")],
-    "building_combined_point": [("building_combined_point", "combined_point")],
-    "indoor": [("indoor_point", "point"), ("indoor_line", "line"), ("indoor_polygon", "polygon")],
-    "infrastructure": [("infrastructure_point", "point"), ("infrastructure_line", "line"), ("infrastructure_polygon", "polygon")],
-    "landuse": [("landuse_point", "point"), ("landuse_polygon", "polygon")],
-    "leisure": [("leisure_point", "point"), ("leisure_polygon", "polygon")],
-    "natural": [("natural_point", "point"), ("natural_line", "line"), ("natural_polygon", "polygon")],
-    "place": [("place_point", "point"), ("place_line", "line"), ("place_polygon", "polygon")],
-    "poi": [("poi_point", "point"), ("poi_line", "line"), ("poi_polygon", "polygon")],
-    "poi_combined_point": [("poi_combined_point", "combined_point")],
-    "public_transport": [("public_transport_point", "point"), ("public_transport_line", "line"), ("public_transport_polygon", "polygon")],
-    "road": [("road_point", "point"), ("road_line", "line"), ("road_polygon", "polygon")],
-    "road_major": [("road_major", "line")],
-    "shop": [("shop_point", "point"), ("shop_polygon", "polygon")],
-    "shop_combined_point": [("shop_combined_point", "combined_point")],
-    "tags": [("tags", "none")],
-    "traffic": [("traffic_point", "point"), ("traffic_line", "line"), ("traffic_polygon", "polygon")],
-    "unitable": [("unitable", "any")],
-    "water": [("water_point", "point"), ("water_line", "line"), ("water_polygon", "polygon")],
-}
-
-TABLES: list[TableSpec] = [
-    TableSpec(layer=layer, name=name, kind=kind)
-    for layer, tbls in sorted(_LAYER_TABLES.items())
-    for name, kind in tbls
-]
 
 
 def resolve_layerset_path(cli_value: str | None) -> str | None:
@@ -1030,8 +703,162 @@ def layerset_layers(layerset: str, layerset_path: str | None = None) -> list[str
     return sorted(
         layer
         for layer, value in parser["layerset"].items()
-        if layer in LAYER_BUILDERS and value.lower() == "true"
+        if layer in _LAYER_TABLES and value.lower() == "true"
     )
+
+
+
+
+# ---------------------------------------------------------------------------
+# the table spec: every table's membership predicate and projection
+# ---------------------------------------------------------------------------
+
+def _table_spec() -> dict[str, tuple[Column, dict[str, Column]]]:
+    """table name → (membership predicate, ordered projection) for every
+    table in :data:`_LAYER_TABLES` — the one place a table's rows and
+    columns are defined. Predicates are unbound Columns over the
+    osm-objects schema; a NULL predicate counts as non-member
+    (``DataFrame.filter`` three-valued semantics). Name columns capture the
+    calling thread's ``scalars.name_language`` scope.
+
+    The geometry conjunct comes FIRST in every predicate: one column
+    comparison short-circuits the tag logic for rows of the wrong geometry
+    class (And evaluates left-to-right in both codegen and interpreted
+    paths). amenity/shop/infrastructure/traffic use the flat member helpers
+    (derivations on each helper).
+
+    Expressions every table shares (the base columns, the best-name chain)
+    are built once: each Column costs py4j round trips, and the router
+    merges projections by expression text, so one ``name`` object becomes
+    one CASE branch instead of one per layer (each ``get_name`` call mints
+    fresh lambda variable names)."""
+    t = F.col("tags")
+    node, way, rel, closed = _is_node(), _is_way(), _is_rel(), _closed()
+    name = sc.get_name(t)
+    base = {c: F.col(c) for c in _BASE_COLS}
+    member_ids = F.col("member_ids")
+
+    def full(extra: dict[str, Column], with_members: bool = False) -> dict[str, Column]:
+        """A table's whole projection: the base columns, ``member_ids`` for
+        tables that take relations, then the layer's derived columns."""
+        return {**base, **({"member_ids": member_ids} if with_members else {}), **extra}
+
+    way_closed = way & closed
+    geom = {
+        "point": node,
+        "line": way & ~closed,
+        "polygon": way_closed | (rel & _rel_is_poly()),
+    }
+    spec: dict[str, tuple[Column, dict[str, Column]]] = {}
+
+    def layer(layer_name: str, member: Column, cols: dict[str, Column],
+              polygon: Column | None = None) -> None:
+        """The layer's point/line/polygon tables: geometry class AND tag
+        predicate (``polygon`` replaces the polygon table's whole
+        predicate); polygon tables also carry ``member_ids``."""
+        for table in _LAYER_TABLES[layer_name]:
+            kind = table.rsplit("_", 1)[1]
+            pred = polygon if kind == "polygon" and polygon is not None else geom[kind] & member
+            spec[table] = (pred, full(cols, with_members=kind == "polygon"))
+
+    place = _place_filter()
+    # closed ways AND all matching relations land in place_polygon
+    # (place.lua:113-131, 133-175 — relations get member_ids)
+    layer("place", place, _place_cols(name), polygon=(way_closed | rel) & place)
+
+    road = T(t, "highway").isNotNull()
+    road_wr = (way | rel) & road
+    area = _road_is_area()
+    road_common = _road_common(t, name)
+    routable = _road_routable(t)
+    road_point = {**road_common, "oneway": sc.parse_oneway(T(t, "oneway"))}
+    road_line = {**road_point, **routable}
+    spec["road_point"] = (node & road, full(road_point))
+    spec["road_line"] = (road_wr & ~area, full(road_line, with_members=True))
+    spec["road_polygon"] = (road_wr & area, full({**road_common, **routable}, with_members=True))
+    # road_major: the road_line subset where major_road(highway)
+    # (flex-config/style/road_major.lua)
+    spec["road_major"] = (
+        spec["road_line"][0] & sc.major_road(T(t, "highway")),
+        full(road_line, with_members=True),
+    )
+
+    layer("poi", _poi_filter(name), _poi_cols(name))
+    layer("building", _building_filter(), _building_cols(name))
+    # natural-in-set takes priority; else waterway key (water.lua:73-143)
+    layer(
+        "water",
+        T(t, "natural").isin(WATER_NATURAL_VALUES) | T(t, "waterway").isNotNull(),
+        _water_cols(name),
+    )
+    layer("amenity", _amenity_member(t), _amenity_cols(name))
+    layer("shop", _shop_member(t), _shop_cols(name))
+    for key in ("landuse", "leisure"):
+        layer(key, T(t, key).isNotNull(), {"osm_type": T(t, key), "name": name})
+    # natural minus the water-layer values (natural.lua:56-77)
+    layer(
+        "natural",
+        T(t, "natural").isNotNull() & ~T(t, "natural").isin(WATER_NATURAL_VALUES),
+        {"osm_type": T(t, "natural"), "name": name, "ele": sc.parse_to_meters(T(t, "ele"))},
+    )
+    layer("indoor", sc.has_any_key(t, ["indoor", "door", "entrance"]), _indoor_cols(name))
+    layer("infrastructure", _infrastructure_member(t), _infrastructure_cols(name))
+    layer(
+        "public_transport",
+        sc.has_any_key(t, ["public_transport", "aerialway", "railway"]),
+        _public_transport_cols(name),
+    )
+    # nodes and ways only — traffic.lua defines no relation handler
+    # (traffic.lua:266-292 registers process_node/process_way exclusively);
+    # closed noexit ways are skipped ("noexit does not make sense for
+    # polygons", traffic.lua:242-256)
+    layer(
+        "traffic", _traffic_member(t), _traffic_cols(),
+        polygon=way_closed & _traffic_member(t, with_noexit=False),
+    )
+
+    # tags / unitable escape hatches (flex-config/style/tags.lua,
+    # unitable.lua)
+    has_tags = tagf.has_tags_after_clean(t)
+    spec["tags"] = (has_tags, {
+        "osm_id": base["osm_id"],
+        "geom_type": base["geom_type"],
+        "tags": tagf.clean_tags(t),
+        "osm_url": sc.osm_url(base["geom_type"], base["osm_id"]),
+    })
+    spec["unitable"] = (has_tags, full({"tags": tagf.clean_tags(t)}))
+
+    # combined_point: points and polygons in one table; polygons collapse to
+    # their centroid downstream (operators.centroid_collapse;
+    # flex-config/style/building_combined_point.lua:123,169).
+    # geom_src marks what needs collapsing; only polygon rows keep member_ids.
+    for fam in ("building", "poi", "shop"):
+        (point, cols), (polygon, _) = spec[f"{fam}_point"], spec[f"{fam}_polygon"]
+        spec[f"{fam}_combined_point"] = (point | polygon, {
+            **cols,
+            "geom_src": F.when(node, F.lit("point")).otherwise(F.lit("polygon")),
+            "member_ids": F.when(~node, member_ids),
+        })
+    return spec
+
+
+def _scoped_spec(language: str | None) -> dict[str, tuple[Column, dict[str, Column]]]:
+    """:func:`_table_spec` with the name-language preference of
+    :func:`build_layer_tables`'s ``language`` argument."""
+    with sc.name_language(language if language is not None else sc.default_name_language()):
+        return _table_spec()
+
+
+def _wanted_tables(layerset: str, layerset_path: str | None = None) -> list[str]:
+    """Table names a layerset resolves to, in layer order — the ONE place
+    layerset → table-set resolution lives (predicate and projection
+    surfaces must filter identically or route_layer_rows silently
+    diverges)."""
+    return [
+        name
+        for layer in layerset_layers(layerset, layerset_path)
+        for name in _LAYER_TABLES[layer]
+    ]
 
 
 def build_layer_tables(
@@ -1040,11 +867,12 @@ def build_layer_tables(
     layerset_path: str | None = None,
     language: str | None = None,
 ) -> dict[str, DataFrame]:
-    """One shared scan → every enabled layer's output tables.
+    """One shared scan → every enabled layer's output tables, each
+    ``osm.filter(predicate).select(projection)`` from :func:`_table_spec`.
 
     Callers should ``osm.cache()`` (or persist to a staged table) before this
-    at scale: each layer re-filters the same frame and Spark will otherwise
-    re-read the source per table. Catalyst pushes each layer's tag predicate
+    at scale: each table re-filters the same frame and Spark will otherwise
+    re-read the source per table. Catalyst pushes each table's tag predicate
     into its scan either way.
 
     ``language`` sets the best-name preference every table's ``name`` column
@@ -1055,133 +883,24 @@ def build_layer_tables(
     ambient env vars; jobs resolve PGOSM_LANGUAGE via
     ``scalars.resolve_language``), ``""`` forces the unlocalized chain.
     """
+    wanted = _wanted_tables(layerset, layerset_path)
+    spec = _scoped_spec(language)
     out: dict[str, DataFrame] = {}
-    with sc.name_language(language if language is not None else sc.default_name_language()):
-        for layer in layerset_layers(layerset, layerset_path):
-            for name, df in LAYER_BUILDERS[layer](osm).items():
-                out[name] = df
+    for name in wanted:
+        pred, cols = spec[name]
+        out[name] = osm.filter(pred).select(*[e.alias(c) for c, e in cols.items()])
     return out
 
-
-# ---------------------------------------------------------------------------
-# per-table membership predicates — the single-scan dispatch surface
-# (layers/router.py). Each predicate is the conjunction of the same filter
-# pieces its LAYER_BUILDERS twin chains through DataFrame.filter calls
-# (Catalyst collapses chained filters to the same conjunction), built from
-# the SAME helper functions so the logic lives once. Lockstep with the
-# builders is enforced by tests/test_router.py: per-table id-set equality
-# on a fixture covering every geometry variant.
-# ---------------------------------------------------------------------------
 
 def layer_table_predicates(
     layerset: str = "everything", layerset_path: str | None = None
 ) -> dict[str, Column]:
-    """table name → boolean membership Column (unbound; evaluate against any
-    frame with the osm-objects schema). NULL predicates count as non-members,
-    matching ``DataFrame.filter`` three-valued semantics."""
-    t = F.col("tags")
-    node, way, rel = _is_node(None), _is_way(None), _is_rel(None)
-    closed = _closed(None)
-    way_open = way & ~closed
-    way_closed = way & closed
-    poly_std = way_closed | (rel & _rel_is_poly(None))
-
-    p: dict[str, Column] = {}
-
-    # geometry conjunct FIRST in every predicate: one column comparison
-    # short-circuits the tag logic for rows of the wrong geometry class
-    # (And evaluates left-to-right in both codegen and interpreted paths).
-    # amenity/shop/traffic/infrastructure use the flat member helpers —
-    # row-set equal to the builders' CASE.isNotNull() filters (derivations
-    # on each helper; equality pinned by tests/test_router.py).
-    place = _place_filter(None)
-    p["place_point"] = node & place
-    p["place_line"] = way_open & place
-    p["place_polygon"] = (way_closed | rel) & place
-
-    road = T(t, "highway").isNotNull()
-    road_wr = (way | rel) & road
-    area = _road_is_area(None)
-    p["road_point"] = node & road
-    p["road_line"] = road_wr & ~area
-    p["road_polygon"] = road_wr & area
-    p["road_major"] = p["road_line"] & sc.major_road(T(t, "highway"))
-
-    poi = _poi_filter(None)
-    p["poi_point"] = node & poi
-    p["poi_line"] = way_open & poi
-    p["poi_polygon"] = poly_std & poi
-
-    building = _building_filter(None)
-    p["building_point"] = node & building
-    p["building_polygon"] = poly_std & building
-
-    water = T(t, "natural").isin(WATER_NATURAL_VALUES) | T(t, "waterway").isNotNull()
-    p["water_point"] = node & water
-    p["water_line"] = way_open & water
-    p["water_polygon"] = poly_std & water
-
-    amenity = _amenity_member(t)
-    p["amenity_point"] = node & amenity
-    p["amenity_line"] = way_open & amenity
-    p["amenity_polygon"] = poly_std & amenity
-
-    shop = _shop_member(t)
-    p["shop_point"] = node & shop
-    p["shop_polygon"] = poly_std & shop
-
-    for key, prefix in (("landuse", "landuse"), ("leisure", "leisure")):
-        single = T(t, key).isNotNull()
-        p[f"{prefix}_point"] = node & single
-        p[f"{prefix}_polygon"] = poly_std & single
-
-    natural = T(t, "natural").isNotNull() & ~T(t, "natural").isin(WATER_NATURAL_VALUES)
-    p["natural_point"] = node & natural
-    p["natural_line"] = way_open & natural
-    p["natural_polygon"] = poly_std & natural
-
-    indoor = sc.has_any_key(t, ["indoor", "door", "entrance"])
-    p["indoor_point"] = node & indoor
-    p["indoor_line"] = way_open & indoor
-    p["indoor_polygon"] = poly_std & indoor
-
-    infra = _infrastructure_member(t)
-    p["infrastructure_point"] = node & infra
-    p["infrastructure_line"] = way_open & infra
-    p["infrastructure_polygon"] = poly_std & infra
-
-    pt = sc.has_any_key(t, ["public_transport", "aerialway", "railway"])
-    p["public_transport_point"] = node & pt
-    p["public_transport_line"] = way_open & pt
-    p["public_transport_polygon"] = poly_std & pt
-
-    traffic = _traffic_member(t)
-    p["traffic_point"] = node & traffic
-    p["traffic_line"] = way_open & traffic
-    p["traffic_polygon"] = way_closed & _traffic_member(t, with_noexit=False)
-
-    has_tags = tagf.has_tags_after_clean(t)
-    p["tags"] = has_tags
-    p["unitable"] = has_tags
-
-    for base_layer in ("building", "poi", "shop"):
-        p[f"{base_layer}_combined_point"] = (
-            p[f"{base_layer}_point"] | p[f"{base_layer}_polygon"]
-        )
-
+    """table name → boolean membership Column of the layerset's tables (the
+    spec's first half; layers/router.py evaluates them all in one pass).
+    Name-dependent predicates use the calling thread's name-language scope."""
     wanted = _wanted_tables(layerset, layerset_path)
-    return {name: pred for name, pred in p.items() if name in wanted}
-
-
-def _wanted_tables(layerset: str, layerset_path: str | None = None) -> set[str]:
-    """Table names a layerset resolves to — the ONE place layerset →
-    table-set resolution lives (predicate and projection surfaces must
-    filter identically or route_layer_rows silently diverges)."""
-    return {
-        name
-        for layer in layerset_layers(layerset, layerset_path)
-        for name, _kind in _LAYER_TABLES[layer]
-    }
+    spec = _table_spec()
+    return {name: spec[name][0] for name in wanted}
 
 
 def layer_table_columns(
@@ -1189,135 +908,15 @@ def layer_table_columns(
     layerset_path: str | None = None,
     language: str | None = None,
 ) -> dict[str, dict[str, Column]]:
-    """table name → its FULL output projection as named Column exprs, in the
-    builders' column order (base cols, member_ids for polygon tables, then
-    the layer's derived columns) — the second half of the spec surface that
-    ``layer_table_predicates`` starts: together they let a consumer rebuild
-    any table as ``osm.filter(pred).select(cols)`` or fuse ALL tables into
-    one routed pass (layers/router.py:route_layer_rows). Reuses the same
-    ``_*_cols`` helpers the builders call, so the exprs cannot drift; output
-    equality with the builders is pinned by tests/test_router.py.
+    """table name → its FULL output projection as named Column exprs, in
+    output column order (base cols, member_ids for tables that take
+    relations, then the layer's derived columns) — the spec's second half:
+    with :func:`layer_table_predicates` a consumer can fuse ALL tables into
+    one routed pass (layers/router.py:route_layer_rows) or rebuild one from
+    a routed bundle (router.read_layer_table).
 
     ``language`` as in :func:`build_layer_tables` — the name exprs capture
     it at construction time."""
-    with sc.name_language(language if language is not None else sc.default_name_language()):
-        return _layer_table_columns(layerset, layerset_path)
-
-
-def _layer_table_columns(
-    layerset: str, layerset_path: str | None
-) -> dict[str, dict[str, Column]]:
-    t = F.col("tags")
-
-    def full(extra: dict[str, Column], with_members: bool = False) -> dict[str, Column]:
-        out: dict[str, Column] = {c: F.col(c) for c in _BASE_COLS}
-        if with_members:
-            out["member_ids"] = F.col("member_ids")
-        out.update(extra)
-        return out
-
-    cols: dict[str, dict[str, Column]] = {}
-
-    place = _place_cols(None)
-    cols["place_point"] = full(place)
-    cols["place_line"] = full(place)
-    cols["place_polygon"] = full(place, with_members=True)
-
-    road_point = {**_road_common(t), "oneway": sc.parse_oneway(T(t, "oneway"))}
-    road_line = {**road_point, **_road_routable(t)}
-    road_poly = {**_road_common(t), **_road_routable(t)}
-    cols["road_point"] = full(road_point)
-    cols["road_line"] = full(road_line, with_members=True)
-    cols["road_polygon"] = full(road_poly, with_members=True)
-    cols["road_major"] = full(road_line, with_members=True)
-
-    poi = _poi_cols(None)
-    cols["poi_point"] = full(poi)
-    cols["poi_line"] = full(poi)
-    cols["poi_polygon"] = full(poi, with_members=True)
-
-    building = _building_cols(None)
-    cols["building_point"] = full(building)
-    cols["building_polygon"] = full(building, with_members=True)
-
-    water = _water_cols(None)
-    cols["water_point"] = full(water)
-    cols["water_line"] = full(water)
-    cols["water_polygon"] = full(water, with_members=True)
-
-    amenity = _amenity_cols(None)
-    cols["amenity_point"] = full(amenity)
-    cols["amenity_line"] = full(amenity)
-    cols["amenity_polygon"] = full(amenity, with_members=True)
-
-    shop = _shop_cols(None)
-    cols["shop_point"] = full(shop)
-    cols["shop_polygon"] = full(shop, with_members=True)
-
-    for key, prefix in (("landuse", "landuse"), ("leisure", "leisure")):
-        single = {"osm_type": T(t, key), "name": sc.get_name(t)}
-        cols[f"{prefix}_point"] = full(single)
-        cols[f"{prefix}_polygon"] = full(single, with_members=True)
-
-    natural = {
-        "osm_type": T(t, "natural"),
-        "name": sc.get_name(t),
-        "ele": sc.parse_to_meters(T(t, "ele")),
-    }
-    cols["natural_point"] = full(natural)
-    cols["natural_line"] = full(natural)
-    cols["natural_polygon"] = full(natural, with_members=True)
-
-    indoor = _indoor_cols(None)
-    cols["indoor_point"] = full(indoor)
-    cols["indoor_line"] = full(indoor)
-    cols["indoor_polygon"] = full(indoor, with_members=True)
-
-    infra = _infrastructure_cols(None)[0]
-    cols["infrastructure_point"] = full(infra)
-    cols["infrastructure_line"] = full(infra)
-    cols["infrastructure_polygon"] = full(infra, with_members=True)
-
-    pt_cols = _public_transport_cols(None)
-    cols["public_transport_point"] = full(pt_cols)
-    cols["public_transport_line"] = full(pt_cols)
-    cols["public_transport_polygon"] = full(pt_cols, with_members=True)
-
-    traffic = _traffic_cols(None)[0]
-    cols["traffic_point"] = full(traffic)
-    cols["traffic_line"] = full(traffic)
-    cols["traffic_polygon"] = full(traffic, with_members=True)
-
-    cols["tags"] = {
-        "osm_id": F.col("osm_id"),
-        "geom_type": F.col("geom_type"),
-        "tags": tagf.clean_tags(t),
-        "osm_url": sc.osm_url(F.col("geom_type"), F.col("osm_id")),
-    }
-    cols["unitable"] = {
-        "osm_id": F.col("osm_id"),
-        "geom_type": F.col("geom_type"),
-        "lon": F.col("lon"),
-        "lat": F.col("lat"),
-        "geom_wkb": F.col("geom_wkb"),
-        "tags": tagf.clean_tags(t),
-    }
-
-    preds = layer_table_predicates()
-    for base_layer, base_cols in (
-        ("building", building), ("poi", poi), ("shop", shop)
-    ):
-        # combined tables union point rows + polygon rows (centroid collapse
-        # happens downstream); unionByName(allowMissingColumns) puts the
-        # polygon-only member_ids last and marks provenance in geom_src
-        c = full(base_cols)
-        c["geom_src"] = F.when(preds[f"{base_layer}_point"], F.lit("point")).otherwise(
-            F.lit("polygon")
-        )
-        c["member_ids"] = F.when(
-            preds[f"{base_layer}_polygon"], F.col("member_ids")
-        ).otherwise(F.lit(None).cast("array<bigint>"))
-        cols[f"{base_layer}_combined_point"] = c
-
     wanted = _wanted_tables(layerset, layerset_path)
-    return {name: c for name, c in cols.items() if name in wanted}
+    spec = _scoped_spec(language)
+    return {name: spec[name][1] for name in wanted}

@@ -9,9 +9,9 @@ count job at 600k rows, and at 100 TB it is 44 passes over the input.
 
 ``route_layer_ids`` is the one-pass analog: a single projection evaluates all
 ~44 membership predicates per row (``layers.registry.layer_table_predicates``,
-the same filter expressions the builders chain) and explodes the matched
-table names — whole-stage-codegen CASE logic, zero joins, zero extra scans.
-Equivalence with the per-table builders is pinned by
+the same table spec ``build_layer_tables`` filters on) and explodes the
+matched table names — whole-stage-codegen CASE logic, zero joins, zero extra
+scans. Equivalence with the per-table frames is pinned by
 tests/test_router.py (per-table id-set equality on the all-variants fixture).
 """
 
@@ -77,14 +77,14 @@ def route_layer_rows(
     membership predicates AND all projections in one whole-stage-codegen
     pass. Write it ``partitionBy("layer_table")`` (sinks.export_bundle_routed)
     and each table is a partition-pruned, column-pruned slice with its exact
-    builder schema (``read_layer_table``); absent columns are typed NULLs
-    that parquet stores for free.
+    ``build_layer_tables`` schema (``read_layer_table``); absent columns are
+    typed NULLs that parquet stores for free.
 
     Column derivation: per superset column, one CASE over the tables that
     define it, grouped by identical expression text — most columns collapse
     to one or two branches (e.g. ``name`` is the same expr for every layer),
-    so the projection stays compact. Row-level equality with every builder
-    table is pinned by tests/test_router.py.
+    so the projection stays compact. Row-level equality with every
+    ``build_layer_tables`` table is pinned by tests/test_router.py.
     """
     preds = layer_table_predicates(layerset, layerset_path)
     from pgosm_flex_spark.layers.registry import layer_table_columns
@@ -131,10 +131,10 @@ def read_layer_table(
     srid: int = 4326,
 ):
     """Reconstruct one table from a routed-parquet bundle: partition-pruned
-    scan + the table's exact builder column set (schema parity with
+    scan + the table's exact column set (schema parity with
     build_layer_tables output). For a bundle exported with ``srid=3857``
     pass the same srid so the projected ``x``/``y`` meter columns survive
-    the projection back to the builder schema."""
+    the projection back to the table schema."""
     from pgosm_flex_spark.geometry.srid import _check_srid
     from pgosm_flex_spark.layers.registry import layer_table_columns
 

@@ -42,108 +42,6 @@ def haversine_m_col(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> C
     return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.sqrt(F.least(h, F.lit(1.0))))
 
 
-def topk_per_point(
-    cand: DataFrame,
-    pid_col: str,
-    dist_col: str,
-    fid_col: str,
-    k: int,
-) -> DataFrame:
-    """Bounded top-k per point WITHOUT shuffling the candidate set.
-
-    Ring-join candidates of one point are colocated (the point side expands
-    via explode + broadcast join, staying in its partition), so a
-    ``row_number`` window's hash shuffle of the full candidate set is wasted
-    work. The ORDERING stays JVM-side: ``sortWithinPartitions`` (a local
-    UnsafeRow sort, no exchange — measured 0.36 s on a 19.5M-row candidate
-    set where the old per-batch ``pandas.sort_values`` on a string key cost
-    ~16 s), and the Python stage is ``mapInArrow`` group-boundary ranking:
-    Arrow string columns never materialize as Python objects (the
-    Arrow→pandas object conversion was the second half of that 16 s);
-    boundary detection runs in pyarrow C kernels, ranks in numpy. Output
-    adds ``knn_rank`` (1-based) and keeps ≤k rows per point.
-    """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in cand.schema.fields)
-    schema += ", knn_rank int"
-    pid_idx = [f.name for f in cand.schema.fields].index(pid_col)
-
-    def _rank_sorted(tbl: pa.Table) -> tuple[pa.RecordBatch, pa.Array]:
-        # rows arrive sorted by (pid, dist, fid); rank = offset from the
-        # group start. Returns (ranked batch, first-pid-per-group array).
-        pid = tbl.column(pid_idx)
-        nb = tbl.num_rows
-        new_grp = np.empty(nb, dtype=bool)
-        new_grp[0] = True
-        if nb > 1:
-            neq = pc.not_equal(pid.slice(1), pid.slice(0, nb - 1))
-            new_grp[1:] = neq.combine_chunks().to_numpy(zero_copy_only=False)
-        gidx = np.cumsum(new_grp) - 1
-        starts = np.flatnonzero(new_grp)
-        rank = np.arange(nb) - starts[gidx]
-        keep = rank < k
-        out = tbl.filter(pa.array(keep)).append_column(
-            "knn_rank", pa.array((rank[keep] + 1).astype(np.int32))
-        )
-        batch = out.combine_chunks().to_batches()[0] if out.num_rows else None
-        return batch, pid.take(pa.array(starts)).combine_chunks()
-
-    def stream(batches):
-        # contract: after sortWithinPartitions a point's candidate rows are
-        # contiguous within the partition BY CONSTRUCTION, so only the group
-        # straddling a batch boundary needs carrying. The contract is still
-        # VERIFIED, not assumed: every flushed pid is remembered and a
-        # reappearance raises instead of silently emitting duplicate ranks
-        # (a plan change that drops the sort must fail loudly).
-        carry: pa.Table | None = None
-        seen: set = set()
-
-        def check_and_flush(tbl: pa.Table):
-            batch, group_pids = _rank_sorted(tbl)
-            for p in group_pids.to_pylist():
-                if p in seen:
-                    raise RuntimeError(
-                        f"topk_per_point contiguity contract violated: point "
-                        f"{p!r} reappeared after its group was closed — use "
-                        f"the window-based knn_join path for this plan"
-                    )
-                seen.add(p)
-            return batch
-
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            tbl = pa.Table.from_batches([b])
-            if carry is not None:
-                if b.column(pid_idx)[0].as_py() == carry.column(pid_idx)[0].as_py():
-                    tbl = pa.concat_tables([carry, tbl])
-                else:
-                    flushed = check_and_flush(carry)
-                    if flushed is not None:
-                        yield flushed
-            # split off the (possibly batch-spanning) last group
-            pid = tbl.column(pid_idx)
-            nb = tbl.num_rows
-            is_last_start = pc.equal(pid, pid[nb - 1]).combine_chunks().to_numpy(
-                zero_copy_only=False
-            )
-            last_start = int(np.argmax(is_last_start))
-            carry = tbl.slice(last_start).combine_chunks()
-            if last_start > 0:
-                flushed = check_and_flush(tbl.slice(0, last_start))
-                if flushed is not None:
-                    yield flushed
-        if carry is not None and carry.num_rows:
-            flushed = check_and_flush(carry)
-            if flushed is not None:
-                yield flushed
-
-    ordered = cand.sortWithinPartitions(pid_col, dist_col, fid_col)
-    return ordered.mapInArrow(stream, schema=schema)
-
-
 def knn_join_adaptive(
     points: DataFrame,
     features: DataFrame,
@@ -158,7 +56,6 @@ def knn_join_adaptive(
     search_offset: int = 2,
     broadcast_features: bool = True,
     salt: int = 8,
-    topk_strategy: str = "window",
 ) -> DataFrame:
     """Exact kNN with a per-point cell resolution picked from the local
     feature density — the skew answer for dense urban cells (SURVEY.md §7.3):
@@ -178,21 +75,14 @@ def knn_join_adaptive(
        column renames defeat ReuseExchange).
     3. One ring explode at s = r* − search_offset and one broadcast join
        against feature buckets at every s level (mixed resolutions share one
-       join: the cell id encodes its level), then the top-k.
-
-    ``topk_strategy`` picks the final ranking stage (results identical):
-
-    - ``"window"`` (default): plain ``row_number`` window that Spark ≥3.5
-      rewrites with WindowGroupLimit — a LOCAL sort + per-run top-k BEFORE
-      the exchange, so the shuffle carries ≤k rows per point (the result
-      size), never the candidate set, and the whole path stays in JVM
-      codegen. Round-4 profile: pushing the ~33×-points candidate stream
-      through any Python stage cost ~2 µs/candidate in JVM↔Arrow transfer
-      alone, dwarfing the ranking math.
-    - ``"stream"``: zero-exchange :func:`topk_per_point` (local JVM sort +
-      Arrow-streaming boundary rank). No shuffle at all, but the candidate
-      stream crosses into Python — wins only where the exchange itself is
-      the bottleneck (e.g. disk-spilling shuffles), loses CPU otherwise.
+       join: the cell id encodes its level).
+    4. Top-k: a plain ``row_number`` window that Spark ≥3.5 rewrites with
+       WindowGroupLimit — a LOCAL sort + per-run top-k BEFORE the exchange,
+       so the shuffle carries ≤k rows per point (the result size), never
+       the candidate set, and the whole path stays in JVM codegen. Round-4
+       profile: pushing the ~33×-points candidate stream through any Python
+       stage cost ~2 µs/candidate in JVM↔Arrow transfer alone, dwarfing the
+       ranking math.
 
     Exactness: ≥ k features inside the 3×3 ring at r* bound the true k-th
     neighbor by the ring diameter ≤ 2·√2·c(r*) from the point (point inside
@@ -220,22 +110,10 @@ def knn_join_adaptive(
     level pick becomes one exploded-ancestor equi-join against that map plus
     a per-point aggregate, and the candidate join salts the feature buckets
     ``salt`` ways with each probe picking a bucket by point-id hash (the
-    pip_join skew pattern). Top-k then uses a window — the streaming top-k's
-    contiguity contract does not survive a shuffle join. Identical results
-    to the broadcast path: the distributed density map counts exactly the
-    same votes the driver numpy map does.
+    pip_join skew pattern). Identical results to the broadcast path: the
+    distributed density map counts exactly the same votes the driver numpy
+    map does.
     """
-    if topk_strategy not in ("window", "stream"):
-        raise ValueError(
-            f"topk_strategy must be 'window' or 'stream', got "
-            f"{topk_strategy!r}"
-        )
-    if topk_strategy == "stream" and not broadcast_features:
-        raise ValueError(
-            "topk_strategy='stream' requires broadcast_features=True: the "
-            "streaming top-k's contiguity contract does not survive the "
-            "fallback's shuffle join — use the default 'window'"
-        )
     if search_offset < 2:
         raise ValueError(
             f"search_offset must be >= 2 (got {search_offset}): the "
@@ -498,22 +376,15 @@ def knn_join_adaptive(
             ),
         )
         # JVM-side prune: beyond the kth-distance bound a candidate can never
-        # enter the top-k — cuts the Arrow/Python volume several-fold
+        # enter the top-k — cuts the volume the window sorts several-fold
         .filter(F.col("__dist") <= F.col("__bound"))
         .select("__pid", "__fid", "__dist")
     )
-    if broadcast_features and topk_strategy == "stream":
-        topk = topk_per_point(cand, "__pid", "__dist", "__fid", k)
-    else:
-        # WindowGroupLimit window (see docstring); also the only option
-        # after a shuffle join — the streaming top-k's contiguity contract
-        # does not survive one
-        w = Window.partitionBy("__pid").orderBy(
-            F.col("__dist").asc(), F.col("__fid").asc()
-        )
-        topk = cand.withColumn("knn_rank", F.row_number().over(w)).filter(
-            F.col("knn_rank") <= k
-        )
+    # WindowGroupLimit window (see docstring)
+    w = Window.partitionBy("__pid").orderBy(F.col("__dist").asc(), F.col("__fid").asc())
+    topk = cand.withColumn("knn_rank", F.row_number().over(w)).filter(
+        F.col("knn_rank") <= k
+    )
     return topk.select(
         F.col("__pid").alias(point_id),
         F.col("__fid").alias(feature_id),

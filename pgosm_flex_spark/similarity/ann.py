@@ -19,6 +19,8 @@ Two tiers, per the training-data-pipeline mandate:
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
@@ -40,6 +42,23 @@ def norm_col(a: Column) -> Column:
     return F.sqrt(
         F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v) + F.lit(EPS)
     )
+
+
+def _query_matrix(qp: pd.DataFrame) -> np.ndarray:
+    """The collected query embeddings (``qvec``) as one float64 matrix. A
+    NULL embedding, or one whose length differs from the most common query
+    length, has no cosine to rank by: raise naming the offending query ids
+    rather than failing inside ``np.stack``."""
+    lens = [None if v is None else len(v) for v in qp["qvec"]]
+    common = Counter(n for n in lens if n is not None).most_common(1)
+    dim = common[0][0] if common else None
+    bad = [q for q, n in zip(qp["query_id"], lens) if n is None or n != dim]
+    if bad:
+        raise ValueError(
+            f"{len(bad)} query embedding(s) NULL or not of length {dim}; "
+            f"query ids: {bad[:20]}"
+        )
+    return np.stack(qp["qvec"].to_numpy()).astype(np.float64)
 
 
 def cosine_topk(
@@ -70,7 +89,8 @@ def cosine_topk(
     ties at equal cosine stay id-deterministic. Corpus rows with a NULL
     embedding are skipped (the old plan gave them NULL cosine, which
     ``row_number`` sorts after every real neighbor — at k ≤ |corpus| they
-    could only surface on degenerate all-NULL corpora)."""
+    could only surface on degenerate all-NULL corpora). A NULL or
+    wrong-length QUERY embedding raises ``ValueError`` naming its ids."""
     qp = (
         queries.select(
             F.col(query_id_col).alias("query_id"),
@@ -86,7 +106,7 @@ def cosine_topk(
         return corpus.sparkSession.createDataFrame(
             [], f"query_id {qid_type}, neighbor_id {nid_type}, rank int"
         )
-    Q = np.stack(qp["qvec"].to_numpy()).astype(np.float64)
+    Q = _query_matrix(qp)
     qnorm = np.sqrt((Q * Q).sum(axis=1) + EPS)
     Qn = Q / qnorm[:, None]
 
@@ -276,7 +296,9 @@ def ivf_cosine_topk(
     Queries are the broadcast side — the corpus is never shuffled beyond the
     list assignment column. Recall grows with nprobe/n_centroids; a query's
     exact duplicate always lands in its top-probed list (identical vector →
-    identical nearest centroid), so planted twins are found at nprobe ≥ 1."""
+    identical nearest centroid), so planted twins are found at nprobe ≥ 1.
+    A NULL or wrong-length query embedding raises ``ValueError`` naming its
+    ids."""
     C = _train_centroids(corpus, n_centroids, id_col, vec_col, sample_step, iters)
 
     @F.pandas_udf(LongType())
@@ -284,14 +306,6 @@ def ivf_cosine_topk(
         arr = np.stack(vecs.to_numpy())
         arr = arr / (np.linalg.norm(arr, axis=1, keepdims=True) + EPS)
         return pd.Series(np.argmax(arr @ C.T, axis=1).astype(np.int64))
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def probe_udf(vecs: pd.Series) -> pd.Series:
-        arr = np.stack(vecs.to_numpy())
-        arr = arr / (np.linalg.norm(arr, axis=1, keepdims=True) + EPS)
-        sims = arr @ C.T
-        order = np.argsort(-sims, axis=1)[:, :nprobe].astype(np.int64)
-        return pd.Series(list(order))
 
     # re-rank executes like cosine_topk: queries (+ their probe lists) are
     # collected to the driver — the SAME size contract the previous
@@ -313,10 +327,10 @@ def ivf_cosine_topk(
             [], f"query_id {qid_type}, neighbor_id {nid_type}, rank int"
         )
     qids = qp["query_id"].to_numpy()
-    Q = np.stack(qp["qvec"].to_numpy()).astype(np.float64)
-    # probe normalization matches probe_udf (linalg.norm + EPS); the
-    # re-rank normalization below matches norm_col (sqrt(sumsq + EPS)) —
-    # two distinct formulas in the original, reproduced exactly
+    Q = _query_matrix(qp)
+    # probe normalization matches assign_udf (linalg.norm + EPS), so a query
+    # and its identical corpus twin pick the same nearest list; the re-rank
+    # normalization below matches norm_col (sqrt(sumsq + EPS))
     Qp = Q / (np.linalg.norm(Q, axis=1, keepdims=True) + EPS)
     qsims = Qp @ C.T
     qprobe = np.argsort(-qsims, axis=1)[:, :nprobe].astype(np.int64)

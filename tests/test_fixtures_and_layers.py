@@ -84,10 +84,11 @@ def layer_tables(spark):
 
 
 def test_all_tables_present(layer_tables):
-    from pgosm_flex_spark.layers.registry import _LAYER_TABLES
+    from pgosm_flex_spark.layers.registry import _LAYER_TABLES, _table_spec
 
-    expected = {name for tbls in _LAYER_TABLES.values() for name, _ in tbls}
+    expected = {name for tbls in _LAYER_TABLES.values() for name in tbls}
     assert set(layer_tables) == expected
+    assert set(_table_spec()) == expected  # no spec entry outside the inventory
     assert len(expected) == 44  # 42 style tables + tags + unitable
 
 

@@ -312,10 +312,9 @@ def test_pip_join_point_side_no_shuffle(world, points, spark):
 
 
 def test_knn_adaptive_point_side_no_shuffle(spark):
-    """Scale guard, both top-k strategies: 'stream' must not hash-partition
-    the point side at all; the default 'window' may exchange ONLY the
-    group-limited top-k rows — the Partial WindowGroupLimit must sit below
-    the exchange so the candidate set never shuffles."""
+    """Scale guard: the top-k window may exchange ONLY the group-limited
+    top-k rows — the Partial WindowGroupLimit must sit below the exchange
+    so the candidate set never shuffles."""
     import pandas as pd
     from pgosm_flex_spark.operators.knn import knn_join_adaptive
 
@@ -337,13 +336,6 @@ def test_knn_adaptive_point_side_no_shuffle(spark):
             }
         )
     )
-    stream = knn_join_adaptive(
-        pts, feats, k=3, point_id="image_id", feature_id="osm_id",
-        topk_strategy="stream",
-    )
-    plan = stream._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" not in plan, plan[:2000]
-
     win = knn_join_adaptive(pts, feats, k=3, point_id="image_id", feature_id="osm_id")
     wplan = win._jdf.queryExecution().executedPlan().toString()
     # exactly one point-side exchange, fed by the Partial group limit
@@ -351,10 +343,7 @@ def test_knn_adaptive_point_side_no_shuffle(spark):
     partial_pos = wplan.find("Partial")
     exch_pos = wplan.find("Exchange hashpartitioning")
     assert 0 <= exch_pos < partial_pos, wplan[:2000]
-    # identical rows from both strategies
-    a = sorted(map(tuple, stream.collect()))
-    b = sorted(map(tuple, win.collect()))
-    assert a == b and len(a) == 200 * 3
+    assert win.count() == 200 * 3
 
 
 def test_polygons_within_container_matches_single(world):
@@ -503,23 +492,6 @@ def test_knn_adaptive_nonbroadcast_matches_broadcast(spark):
         for r in alt.collect()
     )
     assert a == b
-
-
-def test_knn_topk_strategy_validated(spark):
-    from pgosm_flex_spark.operators.knn import knn_join_adaptive
-
-    pts = spark.createDataFrame(
-        pd.DataFrame({"image_id": ["a"], "lon": [-77.0], "lat": [38.8]})
-    )
-    feats = spark.createDataFrame(
-        pd.DataFrame({"osm_id": [1], "lon": [-77.0], "lat": [38.81]})
-    )
-    with pytest.raises(ValueError, match="topk_strategy"):
-        knn_join_adaptive(pts, feats, k=1, topk_strategy="streaming")
-    with pytest.raises(ValueError, match="broadcast_features=True"):
-        knn_join_adaptive(
-            pts, feats, k=1, topk_strategy="stream", broadcast_features=False
-        )
 
 
 def test_knn_adaptive_empty_features(spark):

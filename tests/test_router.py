@@ -1,8 +1,11 @@
-"""Single-scan router vs per-table builders: membership must be identical.
+"""Single-scan router vs per-table frames: membership must be identical.
 
-This is the lockstep guarantee for ``layer_table_predicates`` — if a builder's
-filter chain changes without its predicate twin (or vice versa), the id-set
-comparison here fails naming the table.
+Both sides derive from the one table spec (``registry._table_spec``):
+``build_layer_tables`` filters and projects each table on its own, the
+router fuses all predicates into one CASE array and all projections into
+one CASE per column. The lockstep guarantee checked here is that the fused
+form equals the per-table spec — ids per table, full rows, schemas — and the
+comparison fails naming the table.
 """
 
 from collections import Counter
@@ -37,20 +40,24 @@ def test_router_id_sets_match_builders(spark, osm):
         assert set(got) == set(tables)
         for name, df in sorted(tables.items()):
             want = Counter(r["osm_id"] for r in df.select("osm_id").collect())
-            assert got[name] == want, f"{name}: router membership != builder rows"
+            assert got[name] == want, f"{name}: router membership != table rows"
     finally:
         routed.unpersist()
 
 
 def test_router_single_scan_plan(osm):
     """The whole point: one pass. The routed plan must contain exactly one
-    scan of the cached source, where the 44-way union contains 44."""
+    scan of the cached source, where the 44-way union contains 44 — one
+    per table: every table, the combined_point ones included, is a single
+    filtered scan."""
     routed = route_layer_ids(osm)
     plan = routed._jdf.queryExecution().executedPlan().toString()
     assert plan.count("InMemoryTableScan") == 1, plan
 
     union = None
     for name, df in build_layer_tables(osm).items():
+        tplan = df._jdf.queryExecution().executedPlan().toString()
+        assert tplan.count("InMemoryTableScan") == 1, f"{name}: {tplan[:2000]}"
         ids = df.select("osm_id")
         union = ids if union is None else union.unionByName(ids)
     uplan = union._jdf.queryExecution().executedPlan().toString()
@@ -71,9 +78,7 @@ def test_route_layer_rows_single_scan_no_exchange(osm):
 
 def test_layerset_subsets(spark, osm):
     preds = layer_table_predicates("minimal")
-    wanted = {
-        name for layer in layerset_layers("minimal") for name, _ in _LAYER_TABLES[layer]
-    }
+    wanted = {name for layer in layerset_layers("minimal") for name in _LAYER_TABLES[layer]}
     assert set(preds) == wanted
     routed = route_layer_ids(osm, layerset="minimal")
     seen = {r["table"] for r in routed.select("table").distinct().collect()}
@@ -108,7 +113,7 @@ def _comparable(df):
 
 def test_route_layer_rows_equals_builders(spark, osm):
     """Row-LEVEL equality (full projections, not just ids): every table's
-    routed slice must match the builder output exactly."""
+    routed slice must match its build_layer_tables frame exactly."""
     from pgosm_flex_spark.layers.router import route_layer_rows
 
     tables = build_layer_tables(osm, layerset="everything")
@@ -127,14 +132,14 @@ def test_route_layer_rows_equals_builders(spark, osm):
             ], name
             extra = mine.exceptAll(want).count()
             missing = want.exceptAll(mine).count()
-            assert (extra, missing) == (0, 0), f"{name}: +{extra} -{missing} rows vs builder"
+            assert (extra, missing) == (0, 0), f"{name}: +{extra} -{missing} rows vs table"
     finally:
         routed.unpersist()
 
 
 def test_routed_bundle_roundtrip(spark, osm, tmp_path):
     """Write the routed superset partitioned by layer_table; read one table
-    back through read_layer_table — schema and rows must match the builder."""
+    back through read_layer_table — schema and rows must match the table."""
     from pgosm_flex_spark.layers.router import read_layer_table, route_layer_rows
 
     target = str(tmp_path / "routed")
@@ -174,3 +179,73 @@ def test_has_key_prefix_matches_hof(spark):
     )
     for r, (_, want) in zip(got, rows):
         assert bool(r["blob"]) == bool(r["hof"]) == want, r
+
+
+def test_flat_members_match_case(spark, osm):
+    """The flat OR member helpers are row-set equal to the CASE-derived
+    membership they replace (derivations on each helper), on the fixture
+    plus hand-picked first-match and demotion edge cases."""
+    from pgosm_flex_spark.functions import scalars as sc
+    from pgosm_flex_spark.layers import registry as r
+
+    t = F.col("tags")
+    edge = spark.createDataFrame(
+        [(tags,) for tags in [
+            {"emergency": "no", "power": "tower"},
+            {"emergency": "fire_hydrant"},
+            {"amenity": "fire_hydrant", "emergency": "no"},
+            {"amenity": "emergency_phone"},
+            {"highway": "emergency_access_point"},
+            {"man_made": "silo"},
+            {"man_made": "pier"},
+            {"amenity": "bench"},
+            {"bench": "yes"},
+            {"bench": "no"},
+            {"brewery": "x"},
+            {"amenity": "pub"},
+            {"shop": "bakery", "amenity": "cafe"},
+            {"noexit": "yes"},
+            {"noexit": "yes", "barrier": "gate"},
+            {"railway": "level_crossing"},
+            {"highway": "residential"},
+            {},
+        ]],
+        "tags map<string,string>",
+    )
+    name = sc.get_name(t)
+    infra_type = r._infrastructure_cols(name)["osm_type"]
+    traffic_type = r._traffic_cols()["osm_type"]
+    cases = {
+        "amenity": (
+            r._amenity_member(t),
+            sc.has_any_key(t, ["amenity", "bench", "brewery"])
+            & r._amenity_cols(name)["osm_type"].isNotNull(),
+        ),
+        "shop": (
+            r._shop_member(t),
+            sc.has_any_key(t, ["shop", "amenity"]) & r._shop_cols(name)["osm_type"].isNotNull(),
+        ),
+        "infrastructure": (
+            r._infrastructure_member(t),
+            sc.has_any_key(t, r.INFRASTRUCTURE_KEYS) & (infra_type != "unknown"),
+        ),
+        "traffic": (
+            r._traffic_member(t),
+            sc.has_any_key(t, r._TRAFFIC_FIRST_LEVEL_KEYS) & traffic_type.isNotNull(),
+        ),
+        "traffic_polygon": (
+            r._traffic_member(t, with_noexit=False),
+            sc.has_any_key(t, r._TRAFFIC_FIRST_LEVEL_KEYS)
+            & traffic_type.isNotNull()
+            & (traffic_type != "noexit"),
+        ),
+    }
+    rows = osm.select("tags").unionByName(edge)
+    for name, (flat, case) in cases.items():
+        got = rows.select(
+            F.coalesce(flat, F.lit(False)).alias("flat"),
+            F.coalesce(case, F.lit(False)).alias("case"),
+        ).collect()
+        bad = [x for x in got if x["flat"] != x["case"]]
+        assert not bad, f"{name}: {len(bad)} rows differ"
+        assert any(x["flat"] for x in got), name

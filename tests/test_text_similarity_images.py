@@ -111,6 +111,24 @@ def test_cosine_topk_vs_numpy(spark):
         assert g == exp, q
 
 
+def test_topk_null_query_embedding_names_query(spark):
+    """A NULL query embedding has no cosine: both exact and IVF top-k raise
+    a ValueError naming the query id instead of crashing inside np.stack."""
+    rng = np.random.default_rng(5)
+    vecs = rng.standard_normal((12, 4))
+    corpus = spark.createDataFrame(
+        pd.DataFrame({"vec_id": [f"v{i}" for i in range(12)], "embedding": list(map(list, vecs))})
+    )
+    queries = spark.createDataFrame(
+        [("q_ok", [1.0, 0.0, 0.0, 0.0]), ("q_null", None)],
+        "vec_id string, embedding array<double>",
+    )
+    with pytest.raises(ValueError, match="q_null"):
+        ann.cosine_topk(corpus, queries, k=2)
+    with pytest.raises(ValueError, match="q_null"):
+        ann.ivf_cosine_topk(corpus, queries, k=2, n_centroids=2, nprobe=1, sample_step=1)
+
+
 def test_lsh_cosine_recall(spark):
     rng = np.random.default_rng(4)
     base = rng.standard_normal((30, 16)).astype(np.float32)
