@@ -221,8 +221,9 @@ def main() -> int:
         # defines the place_polygon table); the nested rebuild runs on fresh
         # imports (run_post_sql) AND at append finish (I3 —
         # replication_functions.sql:22-38 refreshes derived artifacts after
-        # applying a diff). The rebuild runs eager jobs — charged here, so
-        # pip_join_checkpointed reports only the checkpointed join.
+        # applying a diff). The rebuild is lazy: its cost lands in the
+        # export that writes place_polygon_nested (the "export_bundle"
+        # section).
         if "place_polygon" in tables:
             tables["place_polygon"] = relation_member_dedup(tables["place_polygon"])
             if not args.skip_nested and (mode.run_post_sql or args.mode == "append"):

@@ -234,9 +234,10 @@ def polygon_within(child: wkb_mod.Geom, container: wkb_mod.Geom) -> bool:
     sits ON the boundary, each child edge's midpoint is additionally tested:
     an edge whose two endpoints both touch the boundary (e.g. the corners of
     a concave notch) can run outside without any PROPER crossing, so the
-    vertex + crossing tests alone would falsely accept it. Degenerate
-    tangencies (an edge crossing exactly through a container vertex, a child
-    exactly filling a hole) are undefined at float precision — documented
+    vertex + crossing tests alone would falsely accept it. A child that
+    encloses a whole container hole is rejected by an interior point of that
+    hole. Degenerate tangencies (an edge crossing exactly through a
+    container vertex) are undefined at float precision — documented
     divergence (SURVEY §7.3)."""
     return bool(polygons_within_container([child], container)[0])
 
@@ -297,7 +298,32 @@ def polygons_within_container(
             m_ok[~m_in] = points_on_boundary(mx[~m_in], my[~m_in], container.rings)
         t_off = np.concatenate([[0], np.cumsum(seg_counts[boundary_touch])])[:-1]
         ok[boundary_touch] &= np.logical_and.reduceat(m_ok, t_off)
+
+    # a child that passes the vertex and crossing tests can still enclose a
+    # whole container hole: reject it when an interior point of a hole lies
+    # inside it. Only containers with holes pay for this.
+    holes = _hole_points(container)
+    if holes.size:
+        for i in np.flatnonzero(ok):
+            ok[i] = not points_in_rings(holes[:, 0], holes[:, 1], children[i].rings).any()
     return ok
+
+
+def _hole_points(geom: wkb_mod.Geom) -> np.ndarray:
+    """(h, 2): one interior point of each hole of a (multi)polygon — the
+    point_on_surface of the hole ring together with any rings nested inside
+    it (islands), so the point lies outside the polygon itself."""
+    holes, start = [], 0
+    for n in geom.part_ring_counts or [len(geom.rings)]:
+        holes.extend(geom.rings[start + 1:start + n])
+        start += n
+    firsts = np.array([r[0] for r in geom.rings])
+    pts = []
+    for h in holes:
+        inside = points_in_rings(firsts[:, 0], firsts[:, 1], [h])
+        nested = [r for r, k in zip(geom.rings, inside) if k and r is not h]
+        pts.append(point_on_surface(wkb_mod.Geom(wkb_mod.POLYGON, [h, *nested])))
+    return np.array(pts, dtype=np.float64).reshape(-1, 2)
 
 
 # ---------------------------------------------------------------------------

@@ -71,29 +71,6 @@ def centroid_udf(geom_wkb: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"lon": lons, "lat": lats})
 
 
-@F.pandas_udf(_CENTROID_TYPE)
-def point_on_surface_udf(geom_wkb: pd.Series) -> pd.DataFrame:
-    """ST_PointOnSurface analog: a representative point guaranteed INSIDE
-    the polygon (kernels.point_on_surface) — the candidate generator for
-    containment joins, where a centroid fails on concave shapes (a
-    horseshoe's centroid sits in its notch, outside the polygon, silently
-    dropping real ST_Within pairs including the self-pair)."""
-    lons, lats = [], []
-    cache: dict[bytes, tuple[float, float]] = {}
-    for b in geom_wkb.tolist():
-        if b is None:
-            lons.append(None)
-            lats.append(None)
-            continue
-        key = bytes(b)
-        c = cache.get(key)
-        if c is None:
-            c = cache[key] = kernels.point_on_surface(wkb_mod.decode(key))
-        lons.append(c[0])
-        lats.append(c[1])
-    return pd.DataFrame({"lon": lons, "lat": lats})
-
-
 _BBOX_TYPE = StructType(
     [
         StructField("xmin", DoubleType()),

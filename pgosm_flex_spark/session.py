@@ -23,12 +23,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``cores`` defaults to $SPARK_GRAFT_CPUS (sandbox stand-in for executor
-    count); on a real cluster the master/executor settings come from
+    ``cores`` defaults to $SPARK_GRAFT_CPUS, else the CPUs this process may
+    run on; on a real cluster the master/executor settings come from
     spark-submit and this factory only applies SQL-level tuning.
     """
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         # 2x cores: small enough to avoid tiny-task overhead at test scale,
         # AQE coalesces further at runtime; at 100 TB this is overridden via
@@ -36,9 +36,11 @@ def get_spark(
         shuffle_partitions = max(DEFAULT_SHUFFLE_PARTITIONS, 2 * cores)
 
     # local mode: driver JVM == executor JVM; the 1g default heap OOMs at
-    # bench scale. Sized for the sandbox (128 GiB box); on a real cluster
+    # bench scale. A quarter of host RAM leaves the rest to the JVM's
+    # off-heap memory, the Python workers and the OS; on a real cluster
     # spark-submit supplies executor memory and this only affects the driver.
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+    host_ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{max(1, host_ram // 4 >> 30)}g")
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.driver.memory", driver_mem)

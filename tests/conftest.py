@@ -7,10 +7,9 @@ import pytest
 
 @pytest.fixture(scope="session")
 def spark():
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     from pgosm_flex_spark.session import get_spark
 
-    s = get_spark("pgosm-flex-spark-tests", cores=8, shuffle_partitions=8)
+    s = get_spark("pgosm-flex-spark-tests", shuffle_partitions=8)
     yield s
 
 

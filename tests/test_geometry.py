@@ -235,6 +235,22 @@ def test_polygon_within_concave_and_holes():
     ]))
     assert not kernels.polygon_within(rect(0.45, 0.45, 0.55, 0.55), donut)
     assert kernels.polygon_within(rect(0.1, 0.1, 0.3, 0.3), donut)
+    # children enclosing the whole hole: every vertex inside, no crossing,
+    # yet the hole is not part of the container
+    assert not kernels.polygon_within(rect(0.3, 0.3, 0.7, 0.7), donut)
+    assert not kernels.polygon_within(rect(0.3, 0.3, 0.95, 0.7), donut)
+    # an island part inside the hole belongs to the container: a child on it
+    # is within, one enclosing the hole (and so the water around the
+    # island) is not
+    def square(a, b):
+        return np.array([[a, a], [b, a], [b, b], [a, b], [a, a]], dtype=float)
+
+    lake = wkb.decode(wkb.encode_multipolygon(
+        [[square(0, 10), square(2, 8)[::-1]], [square(3, 7)]]
+    ))
+    assert kernels.polygon_within(rect(4, 4, 6, 6), lake)
+    assert not kernels.polygon_within(rect(1, 1, 9, 9), lake)
+    assert kernels.polygon_within(rect(0.5, 0.5, 1.5, 1.5), lake)
 
 
 def test_polygon_within_boundary_chord_through_notch():

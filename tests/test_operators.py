@@ -92,14 +92,57 @@ def test_pip_join_interior_shortcut_dominates(world, points, spark):
     assert cover.loc[cover["kind"] == kernels.KIND_BOUNDARY, "geom_wkb"].notna().all()
 
 
-def test_nested_admin_polygons(world):
-    nested = build_nested_admin_polygons(world["place_polygon"]).cache()
+def _rect(x0, y0, x1, y1):
+    return wkb.encode_polygon(
+        [np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]], dtype=np.float64)]
+    )
+
+
+def _admin_frame(spark, polys):
+    """place_polygon-shaped frame of administrative polygons from
+    ``(osm_id, admin_level, wkb)`` triples."""
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "osm_id": np.array([p[0] for p in polys], dtype=np.int64),
+                "name": [f"P{p[0]}" for p in polys],
+                "osm_type": ["boundary"] * len(polys),
+                "boundary": ["administrative"] * len(polys),
+                "admin_level": np.array([p[1] for p in polys], dtype=np.int32),
+                "geom_wkb": [p[2] for p in polys],
+            }
+        )
+    )
+
+
+def _straddle_frame(spark):
+    # container 1's bbox straddles lon 0 and the equator, so its enclosing
+    # cell is the level-0 root; children 2-4 lie in three different
+    # quadrants; 6 shares its west edge with container 5 exactly on lon 0,
+    # a level-1 cell boundary
+    return _admin_frame(spark, [
+        (1, 2, _rect(-2.0, -2.0, 2.0, 2.0)),
+        (2, 4, _rect(-1.5, -1.5, -0.5, -0.5)),
+        (3, 4, _rect(0.5, 0.5, 1.5, 1.5)),
+        (4, 4, _rect(0.5, -1.5, 1.5, -0.5)),
+        (5, 6, _rect(0.0, 0.5, 1.0, 1.5)),
+        (6, 8, _rect(0.0, 0.75, 0.5, 1.25)),
+    ])
+
+
+@pytest.mark.parametrize("source", ["fixture_world", "straddle"])
+def test_nested_admin_polygons(source, request, spark):
+    if source == "fixture_world":
+        place_polygon = request.getfixturevalue("world")["place_polygon"]
+    else:
+        place_polygon = _straddle_frame(spark)
+    nested = build_nested_admin_polygons(place_polygon).cache()
     rows = {r["osm_id"]: r for r in nested.collect()}
 
     # brute-force oracle: exact ST_Within over every polygon pair (self
     # included — ST_Within(p, p) is true), same semantics the operator's
-    # prefilter + exact-verify pipeline must reproduce
-    polys_pd = world["place_polygon"].select("osm_id", "geom_wkb").toPandas()
+    # candidate join + exact-verify pipeline must reproduce
+    polys_pd = place_polygon.select("osm_id", "geom_wkb").toPandas()
     geoms = {int(r["osm_id"]): wkb.decode(bytes(r["geom_wkb"])) for _, r in polys_pd.iterrows()}
 
     exp_containers: dict[int, set[int]] = {}
@@ -118,6 +161,10 @@ def test_nested_admin_polygons(world):
         assert set(r["osm_id_path"]) == exp, (pid, r["name"])
         exp_inner = (r["osm_id_path"][-1] == pid) and (pid not in contained_by_others)
         assert r["innermost"] == exp_inner, (pid, r["name"])
+    if source == "straddle":
+        assert set(rows[6]["osm_id_path"]) == {1, 5, 6}
+        assert all(set(rows[i]["osm_id_path"]) == {1, i} for i in (2, 3, 4))
+        return
     # structural spot checks: paths start at Country; states never innermost
     nb = [r for r in rows.values() if r["osm_type"] == "neighbourhood"]
     assert len(nb) == 256
@@ -368,10 +415,9 @@ def test_polygons_within_container_matches_single(world):
 
 def test_nested_horseshoe_centroid_outside(spark):
     """A horseshoe whose centroid falls in its notch (OUTSIDE the polygon)
-    must still appear in the hierarchy with its full container path — the
-    representative point must be an interior point (ST_PointOnSurface), not
-    the centroid, or the candidate join drops the self-pair and every true
-    container of the concave shape."""
+    must still appear in the hierarchy with its full container path — a
+    candidate join keyed on centroids would drop the self-pair and every
+    true container of the concave shape."""
     import pandas as pd
 
     hs = np.array(
@@ -418,33 +464,51 @@ def test_nested_horseshoe_centroid_outside(spark):
     assert rows[2]["innermost"] and not rows[1]["innermost"]
 
 
-def test_nested_no_broadcast_fallback(world, spark):
-    # broadcast_containers=False must thread through EVERY stage — the inner
-    # pip_join's cover, the container-attribute join, and the innermost
-    # `others` side: zero explicit broadcast hints in the analyzed plan, and
-    # with the planner's auto-broadcast off, zero BroadcastExchange in the
-    # physical plan — while producing the identical rows
-    # truncate input lineage so the audit covers the nested pipeline itself,
-    # not the fixture world's own upstream broadcast joins
+def test_nested_child_enclosing_container_hole(spark):
+    """A child whose vertices all lie in the donut's ring body but which
+    encloses the donut's hole is NOT within the donut, wherever its
+    interior point falls; a child in the ring body is."""
+    donut = wkb.encode_polygon([
+        np.array([[0, 0], [1, 0], [1, 1], [0, 1], [0, 0]], dtype=np.float64),
+        np.array([[0.4, 0.4], [0.6, 0.4], [0.6, 0.6], [0.4, 0.6], [0.4, 0.4]],
+                 dtype=np.float64),
+    ])
+    df = _admin_frame(spark, [
+        (1, 4, donut),
+        (2, 6, _rect(0.3, 0.3, 0.95, 0.7)),  # off-centre: encloses the hole
+        (3, 6, _rect(0.25, 0.25, 0.7, 0.7)),  # centred: encloses the hole
+        (4, 6, _rect(0.1, 0.1, 0.3, 0.3)),   # in the ring body
+    ])
+    rows = {r["osm_id"]: r for r in build_nested_admin_polygons(df).collect()}
+    assert rows[2]["osm_id_path"] == [2]
+    assert rows[3]["osm_id_path"] == [3]
+    assert rows[4]["osm_id_path"] == [1, 4]
+    assert not rows[1]["innermost"] and rows[2]["innermost"]
+
+
+def test_nested_single_plan_audit(world, spark):
+    # one plan with no hints: the analyzed plan carries no ResolvedHint (the
+    # optimizer folds hints into join nodes, so only the analyzed plan shows
+    # them), with auto-broadcast off nothing broadcasts and the rows are the
+    # same, and the plan runs no polygon cover and no point-on-surface UDF.
+    # The input lineage is truncated so the audit covers the nested plan
+    # itself, not the fixture world's own upstream joins.
     pp = world["place_polygon"].localCheckpoint(eager=True)
     ref = build_nested_admin_polygons(pp)
-    alt = build_nested_admin_polygons(pp, broadcast_containers=False, salt=4)
-    # hint audit on the ANALYZED plan (the optimizer folds ResolvedHint into
-    # join nodes, so the optimized plan always counts 0)
-    analyzed = alt._jdf.queryExecution().analyzed().toString()
-    ref_analyzed = ref._jdf.queryExecution().analyzed().toString()
+    analyzed = ref._jdf.queryExecution().analyzed().toString()
     assert analyzed.count("ResolvedHint") == 0
-    assert ref_analyzed.count("ResolvedHint") > 0
+    assert analyzed.count("MapInPandas") == 1 and "_exact_within" in analyzed, analyzed[:2000]
+    assert "point_on_surface" not in analyzed
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        audit = build_nested_admin_polygons(pp, broadcast_containers=False, salt=4)
+        audit = build_nested_admin_polygons(pp)
         plan = audit._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastExchange" not in plan, plan[:2000]
+        b = sorted(map(tuple, audit.collect()))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    a = sorted(map(tuple, ref.select("osm_id", "nest_level", "innermost").collect()))
-    b = sorted(map(tuple, alt.select("osm_id", "nest_level", "innermost").collect()))
+    a = sorted(map(tuple, ref.collect()))
     assert a == b
 
 

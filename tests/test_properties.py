@@ -367,7 +367,8 @@ def test_segment_pair_intersections_skips_collinear(px, py, ang, r, off):
 
 
 # ---------------------------------------------------------------------------
-# point_on_surface — the containment-join representative contract
+# point_on_surface — the interior-point contract (the hole test of
+# polygons_within_container)
 # ---------------------------------------------------------------------------
 
 
@@ -375,9 +376,9 @@ def test_segment_pair_intersections_skips_collinear(px, py, ang, r, off):
 @given(seed=st.integers(0, 2**31 - 1), k=st.integers(5, 16))
 def test_point_on_surface_inside_star_shaped(seed, k):
     """point_on_surface must land strictly INSIDE arbitrary (frequently
-    concave) simple polygons — the property the nested containment join
-    relies on, and exactly where the area centroid fails (a horseshoe's
-    centroid sits in its notch)."""
+    concave) simple polygons — the property the container-hole test of
+    polygons_within_container relies on, and exactly where the area
+    centroid fails (a horseshoe's centroid sits in its notch)."""
     rng = np.random.default_rng(seed)
     ang = np.sort(rng.uniform(0, 2 * np.pi, k))
     if np.min(np.diff(ang)) < 1e-3:
