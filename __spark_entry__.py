@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from pgosm_flex_spark.functions import scalars as sc
 from pgosm_flex_spark.layers import build_layer_tables
-from pgosm_flex_spark.operators import knn_join, pip_join
+from pgosm_flex_spark.operators import knn_join_adaptive, pip_join
 from pgosm_flex_spark.operators.nested import build_nested_admin_polygons
 from pgosm_flex_spark.operators.tiles import tile_counts
 from pgosm_flex_spark.similarity import ann
@@ -116,31 +116,7 @@ def q_knn3_nearest_cities(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"(({b['x0']} + {b['x1']}) / 2)").alias("lon"),
         F.expr(f"(({b['y0']} + {b['y1']}) / 2)").alias("lat"),
     )
-    out = knn_join(
-        pts, centers, k=3, point_id="event_id", feature_id="city_key", res=12, ring=2
-    )
-    return out.select(
-        "event_id", F.col("knn_rank").cast("int").alias("knn_rank"),
-        F.col("city_key").cast("int").alias("city_key"),
-    ).orderBy("event_id", "knn_rank")
-
-
-def q_knn3_adaptive_cities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same task as knn3_nearest_cities but through the single-pass
-    density-routed adaptive operator — value-verified against the same
-    brute-force oracle."""
-    from pgosm_flex_spark.operators.knn import knn_join_adaptive
-
-    pts = td.derived_points(spark, sf_dir).filter(F.col("event_id") % 37 == 0)
-    b = td.cell_bounds_sql("n_nationkey")
-    centers = td.load(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").cast("long").alias("city_key"),
-        F.expr(f"(({b['x0']} + {b['x1']}) / 2)").alias("lon"),
-        F.expr(f"(({b['y0']} + {b['y1']}) / 2)").alias("lat"),
-    )
-    out = knn_join_adaptive(
-        pts, centers, k=3, point_id="event_id", feature_id="city_key"
-    )
+    out = knn_join_adaptive(pts, centers, k=3, point_id="event_id", feature_id="city_key")
     return out.select(
         "event_id", F.col("knn_rank").cast("int").alias("knn_rank"),
         F.col("city_key").cast("int").alias("city_key"),
@@ -1259,7 +1235,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "nested_admin_paths": q_nested_admin_paths,
         "concave_nested": q_concave_nested,
         "knn3_nearest_cities": q_knn3_nearest_cities,
-        "knn3_adaptive_cities": q_knn3_adaptive_cities,
+        # both kNN keys run the one kNN operator
+        "knn3_adaptive_cities": q_knn3_nearest_cities,
         "tile_counts_z12": q_tile_counts_z12,
         "cell_counts_res12": q_cell_counts_res12,
         "road_type_counts": q_road_type_counts,

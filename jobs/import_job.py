@@ -89,16 +89,6 @@ def main() -> int:
         help="export via the single-scan router (one source pass writes all "
         "tables partitioned by layer_table) instead of one write per table",
     )
-    p.add_argument(
-        "--dry-run",
-        action="store_true",
-        help="execute every sink's full plan through Spark's noop writer: "
-        "nothing is stored or journaled. Validates the whole pipeline "
-        "without storage; also the measurement mode for scaling pairs where "
-        "write bandwidth is modeled as scaling with the fleet (a real "
-        "cluster's executors write to their own disks/object-store shards) "
-        "instead of contending on this sandbox's one shared disk",
-    )
     args = p.parse_args()
 
     from pgosm_flex_spark import __version__, fixtures
@@ -367,7 +357,7 @@ def main() -> int:
                 # override frames are the caller's — project them here; the
                 # routed stream projects inside the sink
                 overrides=project_tables(overrides, args.srid),
-                dry_run=args.dry_run, srid=args.srid,
+                srid=args.srid,
                 layerset_path=layerset_path, language=language,
                 # the job writes the completion marker itself AFTER the
                 # containment join finishes — an early manifest here would
@@ -378,8 +368,7 @@ def main() -> int:
             m = export_bundle(
                 spark, tables, args.out, region=args.region,
                 layerset=args.layerset, pgosm_date=args.date,
-                dry_run=args.dry_run, write_manifest=False,
-                srid=args.srid,
+                write_manifest=False, srid=args.srid,
             )
         sections["export_bundle"] = round(time.time() - t, 1)
         return m
@@ -402,7 +391,6 @@ def main() -> int:
             point_cols=["image_id"],
             unit_res=args.unit_res,
             expected_units=expected_units,
-            dry_run=args.dry_run,
             unit_col="__unit",
             units=point_units,
         )
@@ -414,7 +402,7 @@ def main() -> int:
     # 6. QGIS layer styles (reference: prepare_pgosm_db → load_qgis_styles
     # on every run unless --skip-qgis-style; anti-join merge never
     # overwrites user-customized styles, so re-running is idempotent)
-    if not args.skip_qgis_style and not args.dry_run:
+    if not args.skip_qgis_style:
         from pgosm_flex_spark.styles import load_qgis_styles, staging_from_pg_dump
 
         staging = (
@@ -444,15 +432,8 @@ def main() -> int:
     # library-mode hygiene: nothing stays pinned in executor memory at exit
     osm.unpersist(blocking=False)
     pts.unpersist(blocking=False)
-    if not args.dry_run:
-        # a dry run writes NO completion marker (nothing was stored, so a
-        # later real run starts from scratch) — and must not DELETE one
-        # either: run over an existing real output dir, the noop sinks left
-        # every stored table intact, so the prior manifest still describes
-        # real on-disk state (export_bundle* likewise skip the manifest
-        # write under dry_run)
-        with open(prior_path, "w") as f:
-            json.dump(manifest, f, indent=2, sort_keys=True)
+    with open(prior_path, "w") as f:
+        json.dump(manifest, f, indent=2, sort_keys=True)
     print(json.dumps({"status": "Completed", **manifest["pip_units"],
                       "tables": len(manifest["tables"]),
                       "n_points": n_pts,

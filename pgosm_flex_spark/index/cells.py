@@ -173,35 +173,3 @@ def cell_y_col(cell: Column) -> Column:
 
 def cell_res_col(cell: Column) -> Column:
     return F.shiftright(cell, _RES_SHIFT)
-
-
-def kring_col(cell: Column, k: int, res: int) -> Column:
-    """Array column of the (≤(2k+1)^2) DISTINCT neighbor cells of ``cell``
-    — built from native sequence/transform exprs so kNN ring expansion
-    needs no UDF.
-
-    x wraps modulo 2^res; y rows outside [0, 2^res) are dropped; wrap-folded
-    duplicates (2k+1 > 2^res) are removed with array_distinct so a candidate
-    join never pairs the same (point, feature) twice (a duplicate would
-    otherwise occupy two top-k slots in knn_join's row_number ranking).
-    """
-    n = 1 << res
-    x = cell_x_col(cell)
-    y = cell_y_col(cell)
-    pairs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(-k), F.lit(k)),
-            lambda dx: F.transform(F.sequence(F.lit(-k), F.lit(k)), lambda dy: F.struct(dx.alias("dx"), dy.alias("dy"))),
-        )
-    )
-    valid = F.filter(pairs, lambda p: (y + p["dy"] >= 0) & (y + p["dy"] < n))
-    return F.array_distinct(
-        F.transform(
-            valid,
-            lambda p: (
-                F.lit(res).cast("long") * F.lit(1 << _RES_SHIFT).cast("long")
-                + (F.pmod(x + p["dx"], F.lit(n))).cast("long") * F.lit(1 << _X_SHIFT).cast("long")
-                + (y + p["dy"]).cast("long")
-            ),
-        )
-    )

@@ -100,7 +100,6 @@ def edge_intersection_blades(
     layer_col: str | None = "layer",
     res: int = DEFAULT_RES,
     fallback_res: int = FALLBACK_RES,
-    broadcast_oversized: bool = True,
 ) -> DataFrame:
     """(edge_id, blade_x, blade_y) — exact crossing points between distinct
     edges sharing a cell (+ same layer, sql:129-137). Both edges of a pair
@@ -118,9 +117,8 @@ def edge_intersection_blades(
     would enumerate ALL pairs of normal lines sharing a coarse ancestor cell
     (a metro's entire road set in one res-6 cell) before any primary filter
     could prune them — O(N²) per coarse cell at scale. The oversized side is
-    broadcast when ``broadcast_oversized`` (default): oversized lines are by
-    construction the rare cell-budget overflows; pass False to fall back to
-    a shuffle join on cell if that assumption ever breaks.
+    broadcast: oversized lines are by construction the rare cell-budget
+    overflows.
 
     ``res`` must be strictly finer than ``fallback_res``: at res ==
     fallback_res every line's primary cells ARE fallback cells, so the
@@ -193,10 +191,7 @@ def edge_intersection_blades(
     )
     # mixed pairs: the tiny oversized set against normal lines' 1-2 ancestor
     # rows — linear in the line count
-    over_a = side(oversized, "a")
-    if broadcast_oversized:
-        over_a = F.broadcast(over_a)
-    pairs_mixed = over_a.join(side(ancestors, "b"), "cell")
+    pairs_mixed = F.broadcast(side(oversized, "a")).join(side(ancestors, "b"), "cell")
     pairs = pairs_same.unionByName(pairs_mixed)
     if layer_col:
         pairs = pairs.filter(

@@ -106,7 +106,6 @@ class Checkpointer:
         units: Iterable[str],
         process: Callable[[str], dict],
         max_parallel: int = 4,
-        journal: bool = True,
     ) -> dict[str, dict]:
         """Process every unit not yet journaled as completed.
 
@@ -123,24 +122,15 @@ class Checkpointer:
         dominant cost. Spark's scheduler interleaves the concurrent jobs'
         stages across all cores; set ``max_parallel=1`` for the reference's
         strictly-serial batch-loop behavior.
-
-        ``journal=False`` runs EVERY unit — neither recording completion
-        nor honoring a prior run's journal — for dry-run/validation passes
-        whose ``process`` stores no output. Writing nothing but journaling
-        would let a later real run resume past empty units; conversely,
-        honoring the journal here would let a dry run after a completed
-        real run of the same job_id skip every unit and validate nothing
-        while reporting success.
         """
-        done = self.completed_units(spark) if journal else set()
+        done = self.completed_units(spark)
         results: dict[str, dict] = {}
         lock = threading.Lock()
 
         def run_one(unit: str) -> None:
             t0 = time.time()
             metrics = process(unit)
-            if journal:
-                self.mark_completed(spark, unit, metrics, t0)
+            self.mark_completed(spark, unit, metrics, t0)
             with lock:
                 results[unit] = metrics
 
@@ -171,7 +161,6 @@ def checkpointed_pip_join(
     unit_res: int = 4,
     max_parallel: int = 4,
     expected_units: Iterable[str] | None = None,
-    dry_run: bool = False,
     unit_col: str | None = None,
     units: Iterable[str] | None = None,
     **pip_kwargs,
@@ -185,13 +174,6 @@ def checkpointed_pip_join(
     moves or removes a cell's last points must still overwrite that cell's
     stale ``unit=<cell>/`` output (with an empty one), or stored pairs
     diverge from a full recompute.
-
-    ``dry_run``: execute every unit's full plan through Spark's ``noop``
-    sink — nothing is stored and nothing is journaled (a later real run
-    must not resume past units that wrote no data). Validates the whole
-    pipeline end-to-end without storage, and models the cluster case where
-    write bandwidth scales with the fleet instead of contending on one
-    local disk (BASELINE.md §Full-JOB scaling ran its noop legs this way).
 
     ``unit_col`` + ``units``: callers that already materialized the point
     side WITH its unit column (and learned the unit set from their own
@@ -254,9 +236,6 @@ def checkpointed_pip_join(
             sub, polygons, point_cols=point_cols, cover=cover,
             res_levels=levels, **pip_kwargs,
         )
-        if dry_run:
-            pairs.write.format("noop").mode("overwrite").save()
-            return {"pairs": -1, "dry_run": True}
         target = os.path.join(out_dir, f"unit={unit}")
         pairs.write.mode("overwrite").parquet(target)
         try:
@@ -266,10 +245,7 @@ def checkpointed_pip_join(
             # would otherwise be journaled completed with a wrong metric
         return {"pairs": n}
 
-    results = cp.run_units(
-        spark, sorted(units), process, max_parallel=max_parallel,
-        journal=not dry_run,
-    )
+    results = cp.run_units(spark, sorted(units), process, max_parallel=max_parallel)
     if unit_col is None:  # the caller owns its own persist otherwise
         pts.unpersist(blocking=False)
     cover.unpersist(blocking=False)

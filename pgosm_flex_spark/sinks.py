@@ -32,17 +32,13 @@ def write_layer_table(
     out_dir: str,
     name: str,
     cell_res: int = 8,
-    mode: str = "overwrite",
-    dry_run: bool = False,
 ) -> int:
     """Write one layer table, cell-bucketed for pruning: rows with a point
     location gain a coarse cell column used as the partition key (the
     'index' analog of the reference's per-table GiST specs,
     /root/reference/flex-config/helpers.lua:442-573).
 
-    ``dry_run``: execute the table's full plan through the ``noop`` sink —
-    validates the pipeline without storing anything; returns -1 (no count
-    is available without either storing or re-running the plan)."""
+    Overwrites ``out_dir/name`` and returns the written table's row count."""
     target = os.path.join(out_dir, name)
     if "lon" in df.columns and "lat" in df.columns:
         df = df.withColumn(
@@ -52,30 +48,21 @@ def write_layer_table(
                 cells.cell_col(F.col("lon"), F.col("lat"), cell_res),
             ).otherwise(F.lit(-1)),
         )
-        if dry_run:
-            df.write.format("noop").mode("overwrite").save()
-            return -1
-        df.write.mode(mode).partitionBy("cell_p").parquet(target)
-    elif dry_run:
-        df.write.format("noop").mode("overwrite").save()
-        return -1
+        df.write.mode("overwrite").partitionBy("cell_p").parquet(target)
     else:
-        df.write.mode(mode).parquet(target)
-    if mode == "overwrite":
-        # count from the written files: parquet count() is satisfied from
-        # row-group metadata (no data read), while counting ``df`` would run
-        # the whole table pipeline a second time — at scale that doubles the
-        # export's source scans. A zero-row table leaves no parquet files
-        # behind and cannot be re-read without a schema → 0.
-        try:
-            return df.sparkSession.read.parquet(target).count()
-        except AnalysisException:
-            # only the no-files case (schema cannot be inferred / path has
-            # just _SUCCESS); a transient count failure must still raise —
-            # swallowing it would report a written table as 0 rows
-            return 0
-    # append: the caller wants the size of THIS increment, not the total
-    return df.count()
+        df.write.mode("overwrite").parquet(target)
+    # count from the written files: parquet count() is satisfied from
+    # row-group metadata (no data read), while counting ``df`` would run
+    # the whole table pipeline a second time — at scale that doubles the
+    # export's source scans. A zero-row table leaves no parquet files
+    # behind and cannot be re-read without a schema → 0.
+    try:
+        return df.sparkSession.read.parquet(target).count()
+    except AnalysisException:
+        # only the no-files case (schema cannot be inferred / path has
+        # just _SUCCESS); a transient count failure must still raise —
+        # swallowing it would report a written table as 0 rows
+        return 0
 
 
 def export_bundle(
@@ -85,7 +72,6 @@ def export_bundle(
     region: str,
     layerset: str,
     pgosm_date: str,
-    dry_run: bool = False,
     write_manifest: bool = True,
     srid: int = 4326,
 ) -> dict:
@@ -105,11 +91,6 @@ def export_bundle(
 
     Bundle name mirrors the reference's dump naming
     (docker/pgosm_flex.py:553-570): <region>-<layerset>-<date>.
-
-    ``dry_run``: every table's plan executes through the ``noop`` sink
-    (nothing stored, counts reported as -1) — a full-pipeline validation
-    pass, and the measurement mode where write bandwidth is modeled as
-    scaling with the fleet rather than contending on one local disk.
     """
     os.makedirs(out_dir, exist_ok=True)
     if srid != 4326:
@@ -128,12 +109,7 @@ def export_bundle(
         counts = dict(
             zip(
                 names,
-                ex.map(
-                    lambda n: write_layer_table(
-                        tables[n], out_dir, n, dry_run=dry_run
-                    ),
-                    names,
-                ),
+                ex.map(lambda n: write_layer_table(tables[n], out_dir, n), names),
             )
         )
     manifest = {
@@ -150,13 +126,6 @@ def export_bundle(
         ),
         "tables": counts,
     }
-    if dry_run:
-        # a dry run writes NOTHING to out_dir — in particular it must not
-        # overwrite the manifest of a previous real import (whose table
-        # files the noop sinks also left untouched); the dict return is the
-        # validation artifact
-        manifest["dry_run"] = True
-        return manifest
     if write_manifest:
         with open(os.path.join(out_dir, "manifest.json"), "w") as f:
             json.dump(manifest, f, indent=2, sort_keys=True)
@@ -173,7 +142,6 @@ def export_bundle_routed(
     cell_res: int = 8,
     overrides: dict[str, DataFrame] | None = None,
     files_per_partition: int | None = 4,
-    dry_run: bool = False,
     write_manifest: bool = True,
     srid: int = 4326,
     layerset_path: str | None = None,
@@ -250,31 +218,20 @@ def export_bundle_routed(
             F.pmod(F.xxhash64(F.col("osm_id")), F.lit(files_per_partition)),
         )
     counts = {n: 0 for n in expected}
-    if dry_run:
-        # full plan (routing + clustering shuffle) through the noop sink;
-        # no files means no metadata counts — report -1 per routed table
-        routed.write.format("noop").mode("overwrite").save()
-        counts = {n: -1 for n in counts}
-    else:
-        routed.write.mode("overwrite").partitionBy(
-            "layer_table", "cell_p"
-        ).parquet(target)
+    routed.write.mode("overwrite").partitionBy("layer_table", "cell_p").parquet(target)
 
-        # counts from the written files: layer_table is a partition column,
-        # so this group-count is satisfied from directory metadata +
-        # row-group footers, not a re-run of the routing pipeline
-        try:
-            for r in (
-                spark.read.parquet(target)
-                .groupBy("layer_table").count().collect()
-            ):
-                counts[r["layer_table"]] = r["count"]
-        except AnalysisException:
-            # an empty source writes no partition dirs at all (just
-            # _SUCCESS), which parquet cannot infer a schema from — every
-            # table is 0 rows. Anything else (executor loss, FS hiccup)
-            # must raise, not report a freshly-written bundle as all-zero.
-            pass
+    # counts from the written files: layer_table is a partition column,
+    # so this group-count is satisfied from directory metadata +
+    # row-group footers, not a re-run of the routing pipeline
+    try:
+        for r in spark.read.parquet(target).groupBy("layer_table").count().collect():
+            counts[r["layer_table"]] = r["count"]
+    except AnalysisException:
+        # an empty source writes no partition dirs at all (just
+        # _SUCCESS), which parquet cannot infer a schema from — every
+        # table is 0 rows. Anything else (executor loss, FS hiccup)
+        # must raise, not report a freshly-written bundle as all-zero.
+        pass
     for name in sorted(overrides):
         ov = overrides[name]
         if srid != 4326:
@@ -300,9 +257,7 @@ def export_bundle_routed(
                     "already in the target SRID; project it with "
                     "geometry.srid.with_projected first"
                 )
-        counts[name] = write_layer_table(
-            ov, out_dir, name, cell_res=cell_res, dry_run=dry_run
-        )
+        counts[name] = write_layer_table(ov, out_dir, name, cell_res=cell_res)
 
     manifest = {
         "bundle": f"{region.replace('/', '-')}-{layerset}-{pgosm_date}",
@@ -319,11 +274,6 @@ def export_bundle_routed(
         "routed": True,
         "tables": counts,
     }
-    if dry_run:
-        # write NOTHING (same contract as export_bundle: a previous real
-        # bundle's manifest must survive a validation pass)
-        manifest["dry_run"] = True
-        return manifest
     if write_manifest:
         # same completion-marker contract as export_bundle
         with open(os.path.join(out_dir, "manifest.json"), "w") as f:

@@ -23,15 +23,6 @@ def test_cell_col_matches_numpy_oracle(spark):
         assert (got == want).all(), f"res={res}"
 
 
-def test_kring_col_matches_numpy(spark):
-    lon, lat, res = -77.03, 38.9, 10
-    c = int(cells.cells_of_points(np.array([lon]), np.array([lat]), res)[0])
-    df = spark.createDataFrame(pd.DataFrame({"cell": [c]}))
-    got = df.select(cells.kring_col(F.col("cell"), 1, res).alias("ring")).collect()[0]["ring"]
-    want = cells.kring(c, 1)
-    assert sorted(got) == sorted(want.tolist())
-
-
 def test_tile_cols_basic(spark):
     pdf = pd.DataFrame({"lon": [-77.03, 0.0, 139.69], "lat": [38.9, 0.0, 35.68]})
     df = spark.createDataFrame(pdf)

@@ -134,27 +134,6 @@ def test_checkpoint_partial_resume(spark, tmp_path):
     assert seen == ["unitB", "unitC"]
 
 
-def test_dry_run_ignores_prior_journal(spark, tmp_path):
-    """journal=False (dry-run) must run EVERY unit, even ones a prior real
-    run journaled — otherwise a dry-run after a completed real run of the
-    same job_id skips everything and validates nothing while reporting
-    success — and must leave the journal untouched."""
-    out = str(tmp_path / "pairs3")
-    cp = Checkpointer(path=out, job_id="jobY")
-    cp.mark_completed(spark, "unitA", {"pairs": 1}, 0.0)
-    seen = []
-
-    def process(unit):
-        seen.append(unit)
-        return {"pairs": 0}
-
-    res = cp.run_units(spark, ["unitA", "unitB"], process, journal=False)
-    assert sorted(seen) == ["unitA", "unitB"]
-    assert "skipped" not in res["unitA"]
-    # nothing new journaled: a later real run still sees only unitA done
-    assert cp.completed_units(spark) == {"unitA"}
-
-
 # ---------------------------------------------------------------------------
 # incremental refresh
 # ---------------------------------------------------------------------------

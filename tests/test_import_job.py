@@ -166,64 +166,21 @@ def test_import_job_leaves_no_persisted_rdds(spark, tmp_path):
     assert jsc.getPersistentRDDs().size() == before
 
 
-def test_dry_run_executes_everything_but_stores_nothing(spark, tmp_path):
-    # --dry-run drives every plan (layer map, checkpointed join, export)
-    # through the noop sink: full validation pass, zero stored state —
-    # and a later REAL run must start from scratch, not resume past it
-    out = str(tmp_path / "dry")
+def test_routed_export_job_writes_routed_bundle(spark, tmp_path):
+    # --routed-export: one routed scan writes the raw tables under routed/,
+    # the deduped place_polygon override writes its own table dir, and the
+    # manifest marks the bundle routed
+    out = str(tmp_path / "routed")
     rc = run_job(
-        ["--out", out, "--n-images", "800", "--layerset", "minimal",
-         "--skip-nested", "--unit-res", "13", "--dry-run"]
-    )
-    assert rc == 0
-    assert not os.path.exists(os.path.join(out, "manifest.json"))
-    assert glob.glob(f"{out}/image_place_pairs/unit=*") == []
-    assert glob.glob(f"{out}/image_place_pairs/_journal/*.parquet") == []
-    # same out dir, real run: nothing was journaled, so no unit skips
-    rc = run_job(
-        ["--out", out, "--n-images", "800", "--layerset", "minimal",
-         "--skip-nested", "--unit-res", "13"]
+        ["--out", out, "--n-images", "500", "--layerset", "minimal",
+         "--skip-nested", "--unit-res", "13", "--routed-export"]
     )
     assert rc == 0
     manifest = json.load(open(os.path.join(out, "manifest.json")))
-    assert manifest["pip_units"]["skipped_resume"] == 0
-    assert manifest["pip_units"]["total"] > 0
-    assert spark.read.parquet(
-        *glob.glob(f"{out}/image_place_pairs/unit=*")
-    ).count() > 0
-
-
-def test_dry_run_routed_export_reports_dry_manifest(spark, tmp_path):
-    out = str(tmp_path / "dry_routed")
-    rc = run_job(
-        ["--out", out, "--n-images", "500", "--layerset", "minimal",
-         "--skip-nested", "--unit-res", "13", "--routed-export", "--dry-run"]
-    )
-    assert rc == 0
-    assert glob.glob(f"{out}/routed/layer_table=*") == []
-
-
-def test_dry_run_preserves_prior_real_manifest(spark, tmp_path):
-    # a dry run over an EXISTING real output dir must leave the real run's
-    # completion marker (and stored tables) untouched: the noop sinks wrote
-    # nothing, so the prior manifest still describes real on-disk state —
-    # an earlier implementation deleted it, breaking later append-mode runs
-    out = str(tmp_path / "real_then_dry")
-    rc = run_job(
-        ["--out", out, "--n-images", "500", "--layerset", "minimal",
-         "--skip-nested", "--unit-res", "13", "--date", "2026-02-02"]
-    )
-    assert rc == 0
-    real = json.load(open(os.path.join(out, "manifest.json")))
-    assert "dry_run" not in real
-    rc = run_job(
-        ["--out", out, "--n-images", "500", "--layerset", "minimal",
-         "--skip-nested", "--unit-res", "13", "--date", "2026-02-02",
-         "--force", "--dry-run"]
-    )
-    assert rc == 0
-    after = json.load(open(os.path.join(out, "manifest.json")))
-    assert after == real
+    assert manifest["routed"] is True
+    assert manifest["tables"]["place_polygon"] > 0
+    assert glob.glob(f"{out}/routed/layer_table=*")
+    assert glob.glob(f"{out}/place_polygon/**/*.parquet", recursive=True)
 
 
 def test_append_same_date_still_applies_diff(spark, tmp_path):

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -12,7 +14,7 @@ from pgosm_flex_spark.operators import (
     build_nested_admin_polygons,
     build_polygon_cover,
     collapse_to_points,
-    knn_join,
+    knn_join_adaptive,
     pip_join,
     relation_member_dedup,
 )
@@ -182,32 +184,35 @@ def test_nested_admin_polygons(source, request, spark):
     assert depth == {4: 32, 5: 224}, depth
 
 
-def test_knn_matches_brute_force(world, points, spark):
-    pts_df, pdf = points
-    feats = world["osm"].filter(F.col("geom_type") == "N").select("osm_id", "lon", "lat")
-    feats_pd = feats.toPandas()
-    got = knn_join(pts_df.limit(200), feats, k=3, res=9, ring=2).toPandas()
-    # brute force
+def _assert_brute_force_knn(got, pts_pd, feats_pd, k=3):
+    """Each point's ranked neighbour ids equal the brute-force haversine
+    top-k (ties by osm_id), and no (point, feature) pair repeats."""
+    assert not got.duplicated(["image_id", "osm_id"]).any()
     f_lon = feats_pd["lon"].to_numpy()
     f_lat = feats_pd["lat"].to_numpy()
     fid = feats_pd["osm_id"].to_numpy()
-    sub = pdf.iloc[:200]
-    for _, p in sub.iterrows():
+    for _, p in pts_pd.iterrows():
         d = kernels.haversine_m(p["lon"], p["lat"], f_lon, f_lat)
-        order = np.lexsort((fid, d))[:3]
-        exp_ids = fid[order].tolist()
+        exp_ids = fid[np.lexsort((fid, d))[:k]].tolist()
         g = got[got["image_id"] == p["image_id"]].sort_values("knn_rank")
         assert g["osm_id"].tolist() == exp_ids, p["image_id"]
 
 
-def test_knn_coarse_res_wrap_no_duplicates(spark):
-    """At res coarse enough that the ring wraps the antimeridian (2k+1 >
-    2^res), the x-wrap folds offsets onto the same cell; without dedup the
-    candidate join pairs the same (point, feature) twice and a duplicate
-    occupies two top-k slots. Pin: res=1 ring=2 matches brute force exactly
-    and never repeats a feature within a point's top-k."""
-    import pandas as pd
+def test_knn_matches_brute_force(world, points, spark):
+    pts_df, pdf = points
+    feats = world["osm"].filter(F.col("geom_type") == "N").select("osm_id", "lon", "lat")
+    got = knn_join_adaptive(pts_df.limit(200), feats, k=3).toPandas()
+    _assert_brute_force_knn(got, pdf.iloc[:200], feats.toPandas())
 
+
+def test_knn_coarse_res_wrap_no_duplicates(spark):
+    """40 features and 25 points spread over the globe: 7 points' res-4
+    rings hold < k features, so they search the res-1 ring, where the
+    x-wrap folds the 3 ring columns onto 2 cells. Without the wrap-fold
+    guard the candidate join pairs the same (point, feature) twice and a
+    duplicate occupies two top-k slots. No point's res-10 ring holds k
+    features, so without the levels below res 10 no point finds a
+    neighbour."""
     rng = np.random.default_rng(7)
     n_f, n_p = 40, 25
     feats_pd = pd.DataFrame(
@@ -224,22 +229,11 @@ def test_knn_coarse_res_wrap_no_duplicates(spark):
             "lat": rng.uniform(-60, 60, n_p),
         }
     )
-    got = knn_join(
-        spark.createDataFrame(pts_pd),
-        spark.createDataFrame(feats_pd),
-        k=3,
-        res=1,
-        ring=2,
+    got = knn_join_adaptive(
+        spark.createDataFrame(pts_pd), spark.createDataFrame(feats_pd), k=3
     ).toPandas()
-    assert not got.duplicated(["image_id", "osm_id"]).any()
-    f_lon = feats_pd["lon"].to_numpy()
-    f_lat = feats_pd["lat"].to_numpy()
-    fid = feats_pd["osm_id"].to_numpy()
-    for _, p in pts_pd.iterrows():
-        d = kernels.haversine_m(p["lon"], p["lat"], f_lon, f_lat)
-        exp_ids = fid[np.lexsort((fid, d))[:3]].tolist()
-        g = got[got["image_id"] == p["image_id"]].sort_values("knn_rank")
-        assert g["osm_id"].tolist() == exp_ids, p["image_id"]
+    assert len(got) == n_p * 3
+    _assert_brute_force_knn(got, pts_pd, feats_pd)
 
 
 def test_tile_counts_total(points, spark):
@@ -261,38 +255,97 @@ def test_collapse_to_points(world, spark):
         assert fixtures.LON_MIN <= r["lon"] <= fixtures.LON_MAX
 
 
-def test_knn_adaptive_matches_brute_force(spark):
-    """Adaptive multi-res kNN on the skewed (hot-disc) distribution."""
-    import pandas as pd
-    from pgosm_flex_spark.operators.knn import knn_join_adaptive
-
+def _hot_disc_knn_input():
     n_pts, n_feats = 800, 3000
-    pdf = pd.DataFrame(
+    pts = pd.DataFrame(
         {
             "image_id": [f"p{i}" for i in range(n_pts)],
             "lon": [fixtures.point_lonlat(i)[0] for i in range(n_pts)],
             "lat": [fixtures.point_lonlat(i)[1] for i in range(n_pts)],
         }
     )
-    fdf = pd.DataFrame(
+    feats = pd.DataFrame(
         {
             "osm_id": list(range(n_feats)),
             "lon": [fixtures.point_lonlat(10_000 + i)[0] for i in range(n_feats)],
             "lat": [fixtures.point_lonlat(10_000 + i)[1] for i in range(n_feats)],
         }
     )
+    return pts, feats
+
+
+def _band_knn_input(seed, n_feats, f_lat, p_lat, n_pts=60):
+    """Uniform lon on both sides; uniform lat in the ``f_lat`` band for
+    features and in the ``p_lat`` band for points."""
+    rng = np.random.default_rng(seed)
+    feats = pd.DataFrame(
+        {
+            "osm_id": np.arange(n_feats, dtype=np.int64),
+            "lon": rng.uniform(-180, 180, n_feats),
+            "lat": rng.uniform(*f_lat, n_feats),
+        }
+    )
+    pts = pd.DataFrame(
+        {
+            "image_id": [f"p{i}" for i in range(n_pts)],
+            "lon": rng.uniform(-180, 180, n_pts),
+            "lat": rng.uniform(*p_lat, n_pts),
+        }
+    )
+    return pts, feats
+
+
+def _one_point_knn_input(point, lonlats):
+    """One point and a handful of (lon, lat) features."""
+    pts = pd.DataFrame({"image_id": ["a"], "lon": [point[0]], "lat": [point[1]]})
+    feats = pd.DataFrame(
+        {
+            "osm_id": np.arange(len(lonlats), dtype=np.int64),
+            "lon": [lon for lon, _ in lonlats],
+            "lat": [lat for _, lat in lonlats],
+        }
+    )
+    return pts, feats
+
+
+KNN_INPUTS = {
+    "hot_disc": _hot_disc_knn_input,
+    # sparse: a res-10 ring holds < k features for most points
+    # (seed, features, feature lat band, point lat band)
+    "lat60_85_f30": partial(_band_knn_input, 1, 30, (60, 85), (60, 85)),
+    "lat60_85_f300": partial(_band_knn_input, 2, 300, (60, 85), (60, 85)),
+    "lat-85_85_f30": partial(_band_knn_input, 3, 30, (-85, 85), (-85, 85)),
+    "lat-85_85_f300": partial(_band_knn_input, 4, 300, (-85, 85), (-85, 85)),
+    # beyond the mercator clamp (|lat| > 85.05) on both sides
+    "lat75_89.9_f30": partial(_band_knn_input, 5, 30, (75, 89.9), (75, 89.9)),
+    "lat75_89.9_f300": partial(_band_knn_input, 6, 300, (75, 89.9), (75, 89.9)),
+    "lat-89.9_-80_f30": partial(_band_knn_input, 7, 30, (-89.9, -80), (-89.9, -80)),
+    "lat-89.9_-80_f300": partial(_band_knn_input, 8, 300, (-89.9, -80), (-89.9, -80)),
+    # high-latitude points whose only features lie in the other hemisphere
+    "north_pts_south_f10": partial(_band_knn_input, 9, 10, (-40, -20), (80, 85)),
+    # a point at 85° N whose nearest features (640-820 km away) sit in the
+    # equatorward row of its res-4 ring, where a cell is about twice as wide
+    # on the ground as at the point
+    "lat85_ring_row_a": partial(
+        _one_point_knn_input, (0.0, 85.0),
+        [(44.0, 80.0), (44.5, 80.2), (43.5, 79.9), (-170.0, 85.0)],
+    ),
+    "lat85_ring_row_b": partial(
+        _one_point_knn_input, (0.0, 85.0), [(44.0, 79.9), (-22.0, 79.9), (40.0, 80.0)]
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(KNN_INPUTS))
+def test_knn_adaptive_matches_brute_force(spark, case):
+    """Adaptive multi-res kNN equals brute force on the skewed (hot-disc)
+    distribution and on sparse and high-latitude inputs."""
+    pts_pd, feats_pd = KNN_INPUTS[case]()
     got = knn_join_adaptive(
-        spark.createDataFrame(pdf), spark.createDataFrame(fdf), k=3
+        spark.createDataFrame(pts_pd), spark.createDataFrame(feats_pd), k=3
     ).toPandas()
-    f_lon = fdf["lon"].to_numpy()
-    f_lat = fdf["lat"].to_numpy()
-    fid = fdf["osm_id"].to_numpy()
-    assert len(got) == n_pts * 3
-    for _, p in pdf.iterrows():
-        d = kernels.haversine_m(p["lon"], p["lat"], f_lon, f_lat)
-        order = np.lexsort((fid, d))[:3]
-        g = got[got["image_id"] == p["image_id"]].sort_values("knn_rank")
-        assert g["osm_id"].tolist() == fid[order].tolist(), p["image_id"]
+    assert len(got) == len(pts_pd) * 3
+    _assert_brute_force_knn(got, pts_pd, feats_pd)
 
 
 def test_pip_shuffle_salted_matches_broadcast(world, points, spark):
@@ -362,9 +415,6 @@ def test_knn_adaptive_point_side_no_shuffle(spark):
     """Scale guard: the top-k window may exchange ONLY the group-limited
     top-k rows — the Partial WindowGroupLimit must sit below the exchange
     so the candidate set never shuffles."""
-    import pandas as pd
-    from pgosm_flex_spark.operators.knn import knn_join_adaptive
-
     pts = spark.createDataFrame(
         pd.DataFrame(
             {
@@ -512,59 +562,9 @@ def test_nested_single_plan_audit(world, spark):
     assert a == b
 
 
-def test_knn_adaptive_nonbroadcast_matches_broadcast(spark):
-    # the scale fallback (distributed density map + salted shuffle join +
-    # window topk) must return exactly the broadcast path's rows, and its
-    # plan must carry no broadcast-join hint
-    import pandas as pd
-    from pgosm_flex_spark.operators.knn import knn_join_adaptive
-
-    pts = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "image_id": [f"p{i}" for i in range(300)],
-                "lon": [fixtures.point_lonlat(i)[0] for i in range(300)],
-                "lat": [fixtures.point_lonlat(i)[1] for i in range(300)],
-            }
-        )
-    )
-    feats = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "osm_id": list(range(400)),
-                "lon": [fixtures.point_lonlat(7000 + i)[0] for i in range(400)],
-                "lat": [fixtures.point_lonlat(7000 + i)[1] for i in range(400)],
-            }
-        )
-    )
-    ref = knn_join_adaptive(pts, feats, k=3, point_id="image_id", feature_id="osm_id")
-    alt = knn_join_adaptive(
-        pts, feats, k=3, point_id="image_id", feature_id="osm_id",
-        broadcast_features=False,
-    )
-    # hint audit on the ANALYZED plan (the optimizer folds hints into joins)
-    analyzed = alt._jdf.queryExecution().analyzed().toString()
-    assert "ResolvedHint" not in analyzed
-    ref_analyzed = ref._jdf.queryExecution().analyzed().toString()
-    assert "ResolvedHint" in ref_analyzed  # the broadcast path does hint
-    a = sorted(
-        (r["image_id"], r["knn_rank"], r["osm_id"], round(r["distance_m"], 6))
-        for r in ref.collect()
-    )
-    b = sorted(
-        (r["image_id"], r["knn_rank"], r["osm_id"], round(r["distance_m"], 6))
-        for r in alt.collect()
-    )
-    assert a == b
-
-
 def test_knn_adaptive_empty_features(spark):
     """An empty feature side must return an empty result, not crash the
     level-picker UDF with an IndexError on the zero-length density map."""
-    import pandas as pd
-
-    from pgosm_flex_spark.operators.knn import knn_join_adaptive
-
     pts = spark.createDataFrame(
         pd.DataFrame({"image_id": ["a", "b"], "lon": [1.0, 2.0], "lat": [1.0, 2.0]})
     )
@@ -572,18 +572,3 @@ def test_knn_adaptive_empty_features(spark):
         [], schema="osm_id long, lon double, lat double"
     )
     assert knn_join_adaptive(pts, feats, k=3).count() == 0
-    assert knn_join_adaptive(pts, feats, k=3, broadcast_features=False).count() == 0
-
-
-def test_knn_adaptive_search_offset_validated(spark):
-    import pandas as pd
-    import pytest as _pytest
-
-    from pgosm_flex_spark.operators.knn import knn_join_adaptive
-
-    pts = spark.createDataFrame(
-        pd.DataFrame({"image_id": ["a"], "lon": [1.0], "lat": [1.0]})
-    )
-    with _pytest.raises(ValueError, match="search_offset"):
-        knn_join_adaptive(pts, pts.withColumnRenamed("image_id", "osm_id"),
-                          k=1, search_offset=1)
