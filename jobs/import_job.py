@@ -389,7 +389,6 @@ def main() -> int:
             os.path.join(args.out, "image_place_pairs"),
             job_id=f"{args.region}-{args.date}{job_salt}",
             point_cols=["image_id"],
-            unit_res=args.unit_res,
             expected_units=expected_units,
             unit_col="__unit",
             units=point_units,

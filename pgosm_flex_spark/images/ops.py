@@ -56,64 +56,6 @@ def decode_stats(images: DataFrame) -> DataFrame:
     )
 
 
-def _resize_nearest(arr: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    h, w, _ = arr.shape
-    yi = (np.arange(out_h) * h // out_h).clip(0, h - 1)
-    xi = (np.arange(out_w) * w // out_w).clip(0, w - 1)
-    return arr[yi][:, xi]
-
-
-RESIZED_SCHEMA = "image_id string, bytes binary, w int, h int, fmt string"
-
-
-def resize(images: DataFrame, out_h: int, out_w: int) -> DataFrame:
-    """Nearest-neighbor resize; re-encodes with the row's own format."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for r in b.itertuples(index=False):
-                arr = _resize_nearest(codec.decode(bytes(r.bytes)), out_h, out_w)
-                rows.append((r.image_id, codec.encode(arr, r.fmt), out_w, out_h, r.fmt))
-            yield pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt"])
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(run, schema=RESIZED_SCHEMA)
-
-
-FEATURES_SCHEMA = "image_id string, features array<float>"
-
-
-def extract_features(images: DataFrame, grid: int = 4) -> DataFrame:
-    """Cheap deterministic visual features: grid×grid mean-RGB pooling →
-    3·grid² float vector (the decode→feature-extract stage of a multimodal
-    pipeline; a real model swap changes only this function body)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids, feats = [], []
-            for r in b.itertuples(index=False):
-                arr = codec.decode(bytes(r.bytes)).astype(np.float32)
-                h, w, _ = arr.shape
-                if h < grid or w < grid:
-                    # an image smaller than the pooling grid would create
-                    # empty slices (NaN means); nearest-neighbor upsample
-                    # to the grid first — deterministic, value-preserving
-                    arr = _resize_nearest(arr, max(h, grid), max(w, grid))
-                    h, w, _ = arr.shape
-                ys = np.linspace(0, h, grid + 1, dtype=int)
-                xs = np.linspace(0, w, grid + 1, dtype=int)
-                v = [
-                    arr[ys[i]:ys[i + 1], xs[j]:xs[j + 1]].mean(axis=(0, 1))
-                    for i in range(grid)
-                    for j in range(grid)
-                ]
-                ids.append(r.image_id)
-                feats.append(np.concatenate(v).astype(np.float32) / 255.0)
-            yield pd.DataFrame({"image_id": ids, "features": feats})
-
-    return images.select("image_id", "bytes").mapInPandas(run, schema=FEATURES_SCHEMA)
-
-
 AUDIO_STATS_SCHEMA = (
     "audio_id string, sample_rate int, n_samples long, duration_s double, "
     "rms double, peak int, zero_crossings long, decode_ok boolean"
@@ -191,63 +133,16 @@ def audio_stats(rows: DataFrame) -> DataFrame:
     return rows.select("audio_id", "bytes").mapInPandas(run, schema=AUDIO_STATS_SCHEMA)
 
 
-AUDIO_FRAMES_SCHEMA = "audio_id string, frame int, energy double"
-
-
-def frame_audio_energy(rows: DataFrame, frame_ms: int = 25) -> DataFrame:
-    """Fixed-window framing → per-frame RMS energy (the feature-extraction
-    stage of a speech pipeline); one output row per frame."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            # per-row decode (variable payloads), then the framing + RMS
-            # batches across rows sharing (sample_rate, length): one 3D
-            # reshape + mean per group instead of per-row numpy calls
-            decoded: list[tuple[str, np.ndarray, int]] = []
-            for r in b.itertuples(index=False):
-                try:
-                    pcm, sr = codec.decode_audio_bytes(bytes(r.bytes))
-                except Exception:
-                    # corrupt payload: emit zero frames for THIS row (the
-                    # audio_stats decode_ok=False analog — this schema has
-                    # no status column) instead of failing the whole batch
-                    continue
-                decoded.append((r.audio_id, pcm, sr))
-            groups: dict[tuple[int, int], list[int]] = {}
-            for i, (_aid, pcm, sr) in enumerate(decoded):
-                groups.setdefault((sr, pcm.shape[0]), []).append(i)
-            ids, frames, energy = [], [], []
-            for (sr, length), idxs in groups.items():
-                step = max(int(sr * frame_ms / 1000), 1)
-                n_frames = length // step
-                if n_frames == 0:
-                    continue
-                x = np.stack([decoded[i][1][: n_frames * step] for i in idxs])
-                e = np.sqrt(
-                    (x.astype(np.float64) ** 2)
-                    .reshape(len(idxs), n_frames, step)
-                    .mean(axis=2)
-                )
-                for row, i in enumerate(idxs):
-                    ids.extend([decoded[i][0]] * n_frames)
-                    frames.extend(range(n_frames))
-                    energy.extend(e[row].tolist())
-            yield pd.DataFrame({"audio_id": ids, "frame": frames, "energy": energy})
-
-    return rows.select("audio_id", "bytes").mapInPandas(run, schema=AUDIO_FRAMES_SCHEMA)
-
-
 VIDEO_FRAMES_SCHEMA = (
     "video_id string, frame int, n_frames int, fps int, bytes binary, w int, h int, fmt string"
 )
 
 
 def sample_video_frames(rows: DataFrame, every_n: int = 30) -> DataFrame:
-    """Frame sampling: one output row per every_n-th frame, re-encoded as an
-    image payload so the sampled frames feed the image ops (decode_stats /
-    resize / extract_features) unchanged. Random access via the container's
-    frame index — only sampled frames are decompressed, which is the I/O
-    property that matters at 10^12-frame scale. CODEC IS A DETERMINISTIC
+    """Frame sampling: one output row per every_n-th frame, re-encoded as a
+    png image payload that the image codec decodes. Random access via the
+    container's frame index — only sampled frames are decompressed, which is
+    the I/O property that matters at 10^12-frame scale. CODEC IS A DETERMINISTIC
     FAKE (codec.py FVI1; ffmpeg absent) — the sampling plumbing is real."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

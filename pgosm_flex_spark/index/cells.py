@@ -98,32 +98,6 @@ def parent(cell, parent_res: int) -> np.ndarray:
     return pack(x >> shift, y >> shift, parent_res)
 
 
-def kring_offsets(k: int) -> np.ndarray:
-    """(2k+1)^2 × 2 array of (dx, dy) neighbor offsets, ring-ordered."""
-    rng = np.arange(-k, k + 1)
-    dx, dy = np.meshgrid(rng, rng, indexing="ij")
-    offs = np.stack([dx.ravel(), dy.ravel()], axis=1)
-    order = np.argsort(np.abs(offs).max(axis=1), kind="stable")
-    return offs[order]
-
-
-def kring(cell: int, k: int) -> np.ndarray:
-    """DISTINCT neighbor cells within Chebyshev distance k (x wraps around
-    the antimeridian; y is clamped at the poles). When the ring is wider
-    than the world (2k+1 > 2^res) the x-wrap folds offsets onto the same
-    cell — deduplicated here, or a kNN candidate join would pair the same
-    (point, feature) twice and a duplicate could occupy two top-k slots.
-    Output is sorted (np.unique), not ring-ordered."""
-    res, x, y = unpack(np.asarray([cell]))
-    res = int(res[0])
-    n = 1 << res
-    offs = kring_offsets(k)
-    xs = (int(x[0]) + offs[:, 0]) % n
-    ys = int(y[0]) + offs[:, 1]
-    keep = (ys >= 0) & (ys < n)
-    return np.unique(pack(xs[keep], ys[keep], res))
-
-
 # ---------------------------------------------------------------------------
 # native Spark Column implementation (hot path — whole-stage codegen)
 # ---------------------------------------------------------------------------

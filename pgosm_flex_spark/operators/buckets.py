@@ -23,8 +23,7 @@ bucket is oversized is reported only if both verify against the
 representative. Pass ``star_threshold=None`` for the exact unbounded join.
 
 One extra map-side-combinable aggregation per band (bucket size + min id)
-buys a hard per-bucket bound — the same replicate-don't-enumerate bargain as
-pip_join's salted fallback.
+buys a hard per-bucket bound.
 """
 
 from __future__ import annotations

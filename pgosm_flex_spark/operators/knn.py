@@ -11,10 +11,10 @@ UDF, one ring explode and one broadcast equi-join against feature buckets,
 haversine distance JVM-side, and a WindowGroupLimit top-k window.
 
 Completeness: each point searches a ring wide enough to hold its k-th
-neighbour. A point with fewer than k features in its coarsest density ring
-(res 4), or one beyond the web-mercator latitude clamp, searches the whole
-globe. Like ``<->``, a point gets min(k, #features) rows. The one known
-gap: a point below the clamp whose true neighbours lie across the pole.
+neighbour. A point searches the whole globe instead when its coarsest
+density ring (res 4) holds fewer than k features, when it lies beyond the
+web-mercator latitude clamp, or when its kth-distance bound reaches the
+pole. Like ``<->``, a point gets min(k, #features) rows.
 """
 
 from __future__ import annotations
@@ -95,15 +95,16 @@ def knn_join_adaptive(
     in grid distance; mercator conformality makes meter distance locally
     proportional to grid distance (distortion ≪ the 1.41× margin wherever
     the ring spans little latitude), so every true k-nearest feature is
-    inside the searched ring. Near the poles the coarse rings span enough
-    latitude that a neighbour across the pole can fall outside the search.
-    A point whose res-4 ring holds < k features gets an infinite bound and
-    searches its ring at ``GLOBE_RES`` = 1, which covers the globe: every
-    feature is a candidate. Beyond the mercator clamp (|lat| >
-    ``cells.MAX_LAT``) every row lands in y-row 0, where the grid no longer
-    measures distance: such features cast no density votes (they stay in
-    the candidate buckets), and such points get no bound and search every
-    feature. Ties: (distance, feature_id), as in the reference's ``<->``
+    inside the searched ring. That argument fails for a bound disk that
+    reaches the pole: a great circle across the pole is short on the ground
+    and long in the grid. So a point whose bound is at least its distance
+    to the pole, like a point whose res-4 ring holds < k features, gets an
+    infinite bound and searches its ring at ``GLOBE_RES`` = 1, which covers
+    the globe: every feature is a candidate. Beyond the mercator clamp
+    (|lat| > ``cells.MAX_LAT``) every row lands in y-row 0, where the grid
+    no longer measures distance: such features cast no density votes (they
+    stay in the candidate buckets), and such points get no bound and search
+    every feature. Ties: (distance, feature_id), as in the reference's ``<->``
     ordering.
 
     Candidate volume is bounded by the LEVEL STEP: with step-1 levels,
@@ -156,8 +157,8 @@ def knn_join_adaptive(
     # with ≥k features in the 3×3 ring at r*, the true k-th neighbor is
     # within √8·c(r*) (grid distance); metric bound adds a 1.25 safety
     # factor over the ring's widest ground cell width. Points with no such
-    # level, and points beyond the mercator clamp, get an infinite bound
-    # and s = GLOBE_RES.
+    # level, points beyond the mercator clamp and points whose bound
+    # reaches the pole get an infinite bound and s = GLOBE_RES.
     @F.pandas_udf("struct<s:int, bound:double>")
     def _pick_level(plon: "pd.Series", plat: "pd.Series") -> "pd.DataFrame":
         sorted_cells, cnts = density_bc.value
@@ -189,7 +190,11 @@ def knn_join_adaptive(
             (south < 0) & (north > 0), 0.0, np.minimum(np.abs(south), np.abs(north))
         )
         cell_m = EARTH_CIRCUMFERENCE_M * np.cos(np.radians(widest)) / (2.0 ** r_star)
-        bound = np.where(has_bound, bound_factor * cell_m, np.inf)
+        bound = bound_factor * cell_m
+        # a bound disk that reaches the pole holds great circles across it,
+        # which the mercator ring does not measure: no bound, globe search
+        has_bound &= bound < np.radians(90.0 - np.abs(lat_a)) * EARTH_RADIUS_M
+        bound = np.where(has_bound, bound, np.inf)
         s = np.where(has_bound, r_star - SEARCH_OFFSET, GLOBE_RES).astype(np.int32)
         return pd.DataFrame({"s": s, "bound": bound})
 

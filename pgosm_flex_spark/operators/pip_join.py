@@ -19,10 +19,9 @@ distributed two-phase plan:
    (most of them, by area); boundary-cell candidates run the exact
    vectorized PIP pandas UDF.
 
-At 100 TB the point side streams through map-only stages; the cover table is
-the only thing broadcast (bounded by max_cells_per_poly × #polygons). For
-polygon sets too large to broadcast, pass ``broadcast_cover=False`` to fall
-back to a shuffle equi-join on the cell key with optional salting.
+The point side streams through map-only stages; the cover table is the only
+thing broadcast (bounded by ``MAX_CELLS_PER_POLY`` × #polygons). This is the
+one plan: there is no shuffle fallback (see :func:`pip_join` for its limit).
 """
 
 from __future__ import annotations
@@ -39,8 +38,8 @@ from pgosm_flex_spark.geometry import kernels, wkb as wkb_mod
 from pgosm_flex_spark.geometry.udfs import pip_udf
 from pgosm_flex_spark.index import cells
 
-DEFAULT_FINE_RES = 17
-DEFAULT_COARSE_RES = 7
+FINE_RES = 17
+COARSE_RES = 7
 # Per-polygon cell budget: finer covers convert boundary area into interior
 # shortcut cells, and boundary POINT candidates (the rows that must pay the
 # exact-PIP refine) shrink by half per extra level, so the budget buys
@@ -50,17 +49,15 @@ DEFAULT_COARSE_RES = 7
 # level instead of three) and made the cover BUILD faster too (0.70 s vs
 # 1.03 s — no multi-level adaptive search). Cover rows grew only 30k → 44k:
 # interior cells are 17 bytes/row and bounded by area while the wkb payload
-# rides only on boundary rows, and past broadcast budgets the
-# should_broadcast_cover auto-select flips to the cell-partitioned shuffle
-# join anyway, where cover rows are data-proportional state, not a
-# broadcast copy per executor.
-DEFAULT_MAX_CELLS = 16384
+# rides only on boundary rows.
+MAX_CELLS_PER_POLY = 16384
 
 
-def _pick_res(bbox: tuple[float, float, float, float], fine: int, coarse: int, max_cells: int) -> int:
-    """Finest res in [coarse, fine] whose grid keeps the bbox under max_cells."""
+def _pick_res(bbox: tuple[float, float, float, float]) -> int:
+    """Finest res in [COARSE_RES, FINE_RES] whose grid keeps the bbox under
+    MAX_CELLS_PER_POLY."""
     xmin, ymin, xmax, ymax = bbox
-    for res in range(fine, coarse - 1, -1):
+    for res in range(FINE_RES, COARSE_RES - 1, -1):
         n = 1 << res
         nx = max(1, int(math.floor((xmax + 180) / 360 * n)) - int(math.floor((xmin + 180) / 360 * n)) + 1)
         # mercator y span approximated by lat fraction — good enough for sizing
@@ -68,81 +65,52 @@ def _pick_res(bbox: tuple[float, float, float, float], fine: int, coarse: int, m
             float(cells._merc_y(np.array([ymin]))[0]) - float(cells._merc_y(np.array([ymax]))[0])
         )
         ny = max(1, int(ny_frac * n) + 1)
-        if nx * ny <= max_cells:
+        if nx * ny <= MAX_CELLS_PER_POLY:
             return res
-    return coarse
+    return COARSE_RES
 
 
-def build_polygon_cover(
-    polygons: DataFrame,
-    poly_id: str = "osm_id",
-    wkb_col: str = "geom_wkb",
-    fine_res: int = DEFAULT_FINE_RES,
-    coarse_res: int = DEFAULT_COARSE_RES,
-    max_cells_per_poly: int = DEFAULT_MAX_CELLS,
-) -> DataFrame:
-    """polygons → (poly_id, cell, kind, geom_wkb) cover table.
+def build_polygon_cover(polygons: DataFrame) -> DataFrame:
+    """polygons (``osm_id``, ``geom_wkb``) → (osm_id, cell, kind, geom_wkb)
+    cover table.
 
     ``geom_wkb`` is carried only on boundary rows (interior hits need no
     geometry), keeping the broadcast payload small. The adaptive resolution
     is the Spark-native ST_Subdivide: big polygons get coarse cells instead
     of huge cell lists.
     """
-    schema = f"{poly_id} long, cell long, kind tinyint, geom_wkb binary"
+    schema = "osm_id long, cell long, kind tinyint, geom_wkb binary"
 
     def cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             out_id, out_cell, out_kind, out_wkb = [], [], [], []
-            for pid, raw in zip(b[poly_id].tolist(), b[wkb_col].tolist()):
+            for pid, raw in zip(b["osm_id"].tolist(), b["geom_wkb"].tolist()):
                 if raw is None:
                     continue
                 raw = bytes(raw)
                 geom = wkb_mod.decode(raw)
-                res = _pick_res(geom.bbox, fine_res, coarse_res, max_cells_per_poly)
                 try:
-                    cid, kind = kernels.covering_cells(geom, res)
+                    cid, kind = kernels.covering_cells(geom, _pick_res(geom.bbox))
                 except ValueError:
-                    cid, kind = kernels.covering_cells(geom, coarse_res)
+                    cid, kind = kernels.covering_cells(geom, COARSE_RES)
                 out_id.extend([pid] * len(cid))
                 out_cell.extend(cid.tolist())
                 out_kind.extend(kind.tolist())
                 boundary = kind == kernels.KIND_BOUNDARY
                 out_wkb.extend([raw if bnd else None for bnd in boundary.tolist()])
             yield pd.DataFrame(
-                {poly_id: out_id, "cell": out_cell, "kind": out_kind, "geom_wkb": out_wkb}
+                {"osm_id": out_id, "cell": out_cell, "kind": out_kind, "geom_wkb": out_wkb}
             )
 
-    return polygons.select(poly_id, wkb_col).mapInPandas(cover, schema=schema)
-
-
-# auto-selection thresholds for the cover join strategy: a broadcast cover
-# is copied whole into every executor and serialized into every task binary,
-# so past a few million rows / ~10^8 wkb bytes the salted shuffle equi-join
-# (cell co-partitioning — the planetary-polygon-set plan) wins even though
-# it moves the point side. Measured turning point on this host: the
-# world-scale-1000 fixture (337k polygons → 32M-row / ~1 GB cover) ran the
-# 48M-point join at 590 s broadcast vs the shuffle plan's data-proportional
-# wall.
-BROADCAST_COVER_MAX_ROWS = 4_000_000
-BROADCAST_COVER_MAX_BYTES = 128 << 20
-
-
-def should_broadcast_cover(n_rows: int, wkb_bytes: int | None) -> bool:
-    """Strategy pick for a materialized cover: broadcast only while the
-    cover is small enough that shipping it whole beats co-partitioning the
-    point side (thresholds above; ``wkb_bytes`` None = no boundary rows)."""
-    return n_rows <= BROADCAST_COVER_MAX_ROWS and (
-        (wkb_bytes or 0) <= BROADCAST_COVER_MAX_BYTES
-    )
+    return polygons.select("osm_id", "geom_wkb").mapInPandas(cover, schema=schema)
 
 
 def cover_res_levels(cover: DataFrame) -> list[int]:
     """The distinct cell resolutions present in a polygon cover — one
-    bounded driver collect (≤ fine-coarse+1 rows). res_levels is a property
-    of the (fixed) cover, so callers doing repeated joins probe it ONCE and
-    pass it to every :func:`pip_join` call (the checkpointed unit loop,
-    bench reps, the scaling tools) instead of paying a collect job per
-    join."""
+    bounded driver collect (≤ FINE_RES-COARSE_RES+1 rows). res_levels is a
+    property of the (fixed) cover, so callers doing repeated joins probe it
+    ONCE and pass it to every :func:`pip_join` call (the checkpointed unit
+    loop) instead of paying a collect job per join."""
     return sorted(
         r["res"]
         for r in cover.select(cells.cell_res_col(F.col("cell")).alias("res"))
@@ -155,31 +123,21 @@ def pip_join(
     points: DataFrame,
     polygons: DataFrame,
     point_cols: list[str],
-    poly_id: str = "osm_id",
-    lon: str = "lon",
-    lat: str = "lat",
-    wkb_col: str = "geom_wkb",
-    fine_res: int = DEFAULT_FINE_RES,
-    coarse_res: int = DEFAULT_COARSE_RES,
-    max_cells_per_poly: int = DEFAULT_MAX_CELLS,
-    broadcast_cover: bool = True,
     cover: DataFrame | None = None,
     res_levels: list[int] | None = None,
-    salt: int = 8,
 ) -> DataFrame:
-    """points ⋈_within polygons → ``point_cols + [poly_id]``, one row per
-    (point, containing polygon) pair.
+    """points (``lon``, ``lat``) ⋈_within polygons (``osm_id``,
+    ``geom_wkb``) → ``point_cols + ["osm_id"]``, one row per (point,
+    containing polygon) pair.
 
     Pass a precomputed ``cover`` (from :func:`build_polygon_cover`, cached)
     when joining several point sets against the same polygons.
 
-    ``broadcast_cover=False`` switches to the shuffle equi-join fallback for
-    polygon sets too large to broadcast. There the cell key hash-partitions
-    both sides, and a hot cell (dense city) becomes a straggler — so the
-    cover side is replicated ``salt`` ways and each point picks one salt
-    bucket deterministically (adaptive replication: every polygon cover row
-    must exist in every salt bucket a point might choose; cf. PAPERS.md
-    EDBT 2025). AQE skew-join remains as a backstop.
+    Known limit: the cover is always broadcast, whatever its size. A
+    polygon set whose cover outgrows a broadcast (past roughly 4M rows or
+    128 MB of boundary wkb) still broadcasts and gets slow: 337k polygons
+    gave a 32M-row, ~1 GB cover, and the join of 48M points against it took
+    590 s.
     """
     if cover is None:
         # NOT persisted: an internal persist can never be released (the
@@ -187,44 +145,42 @@ def pip_join(
         # call adds up in long-running jobs. The cover builds twice (once for
         # the resolution probe below, once inside the join's broadcast) —
         # callers doing repeated joins pass a cached cover explicitly.
-        cover = build_polygon_cover(
-            polygons, poly_id, wkb_col, fine_res, coarse_res, max_cells_per_poly
-        )
+        cover = build_polygon_cover(polygons)
     if res_levels is None:
-        # one bounded driver collect (≤ fine-coarse+1 rows); callers doing
-        # repeated joins against the same cover pass res_levels explicitly
-        # to skip this job (the checkpointed unit loop does)
+        # one bounded driver collect (≤ FINE_RES-COARSE_RES+1 rows); callers
+        # doing repeated joins against the same cover pass res_levels
+        # explicitly to skip this job (the checkpointed unit loop does)
         res_levels = cover_res_levels(cover)
-        if res_levels and res_levels[-1] > fine_res:
+        if res_levels and res_levels[-1] > FINE_RES:
             # the ancestor rollup shifts the point's fine cell RIGHT by
-            # (fine_res - res); a cover level finer than fine_res cannot be
+            # (FINE_RES - res); a cover level finer than FINE_RES cannot be
             # probed (negative shift — the JVM masks the count into garbage
             # cells that match nothing), so those polygons would silently
             # contribute zero joined points. Probed levels are REAL cover
-            # rows, so this is a genuine mismatch: a precomputed cover built
-            # with a finer fine_res than this call's.
+            # rows, so this is a genuine mismatch: a precomputed cover that
+            # was not built by build_polygon_cover.
             raise ValueError(
                 f"cover contains cells at res {res_levels[-1]} finer than "
-                f"fine_res={fine_res}: pass the fine_res the cover was "
-                "built with (build_polygon_cover default 17)"
+                f"the join's fine res {FINE_RES}: build the cover with "
+                "build_polygon_cover"
             )
     else:
         # explicit levels are a perf contract ("a superset is harmless"):
-        # entries finer than fine_res are unreachable by the rollup and, on
+        # entries finer than FINE_RES are unreachable by the rollup and, on
         # a consistent cover, hold no rows — drop them instead of probing
-        res_levels = sorted({r for r in res_levels if r <= fine_res})
+        res_levels = sorted({r for r in res_levels if r <= FINE_RES})
 
     # ONE join: each point explodes its ancestor cell at every resolution
-    # present in the cover (≤ fine-coarse+1 rows, typically 2-4) and probes
-    # the broadcast cover once. A per-resolution union of joins measures
-    # ~12 fixed-overhead stages that dominate wall time and anti-scale with
-    # cores; the exploded single-stage plan trades a small probe-row
-    # multiplier for a fully parallel pipeline.
-    pts = points.select(*point_cols, F.col(lon).alias("__lon"), F.col(lat).alias("__lat"))
-    pts = pts.withColumn("__fine_cell", cells.cell_col(F.col("__lon"), F.col("__lat"), fine_res))
+    # present in the cover (≤ FINE_RES-COARSE_RES+1 rows, typically 2-4)
+    # and probes the broadcast cover once. A per-resolution union of joins
+    # measures ~12 fixed-overhead stages that dominate wall time and
+    # anti-scale with cores; the exploded single-stage plan trades a small
+    # probe-row multiplier for a fully parallel pipeline.
+    pts = points.select(*point_cols, F.col("lon").alias("__lon"), F.col("lat").alias("__lat"))
+    pts = pts.withColumn("__fine_cell", cells.cell_col(F.col("__lon"), F.col("__lat"), FINE_RES))
     ancestors = []
     for res in res_levels:
-        shift = fine_res - res
+        shift = FINE_RES - res
         ancestors.append(
             cells.pack_col(
                 res,
@@ -234,31 +190,14 @@ def pip_join(
         )
     pts = pts.withColumn("__cell", F.explode(F.array(*ancestors)))
 
-    if broadcast_cover:
-        cov = F.broadcast(cover)
-        cand = pts.join(cov, pts["__cell"] == cov["cell"], "inner")
-    else:
-        # salted shuffle join: replicate every cover row to all salt buckets,
-        # spread each point's probes across buckets by a hash of its fine
-        # cell + coords (deterministic, no RNG)
-        cov = cover.withColumn(
-            "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-        )
-        pts = pts.withColumn(
-            "__salt",
-            F.pmod(F.xxhash64(F.col("__fine_cell"), F.col("__lon"), F.col("__lat")), F.lit(salt)).cast("int"),
-        )
-        cand = pts.join(
-            cov,
-            (pts["__cell"] == cov["cell"]) & (pts["__salt"] == cov["__salt"]),
-            "inner",
-        )
+    cov = F.broadcast(cover)
+    cand = pts.join(cov, pts["__cell"] == cov["cell"], "inner")
     # interior-cell candidates are hits by construction — the exact UDF only
     # ever sees boundary-cell rows
     interior = cand.filter(F.col("kind") == kernels.KIND_INTERIOR)
     boundary = cand.filter(F.col("kind") == kernels.KIND_BOUNDARY).filter(
         pip_udf(F.col("__lon"), F.col("__lat"), F.col("geom_wkb"))
     )
-    return interior.select(*point_cols, F.col(poly_id)).unionByName(
-        boundary.select(*point_cols, F.col(poly_id))
+    return interior.select(*point_cols, F.col("osm_id")).unionByName(
+        boundary.select(*point_cols, F.col("osm_id"))
     )

@@ -158,37 +158,29 @@ def checkpointed_pip_join(
     out_dir: str,
     job_id: str,
     point_cols: list[str],
-    unit_res: int = 4,
-    max_parallel: int = 4,
+    unit_col: str,
+    units: Iterable[str],
     expected_units: Iterable[str] | None = None,
-    unit_col: str | None = None,
-    units: Iterable[str] | None = None,
-    **pip_kwargs,
 ):
-    """The flagship join as a resumable job: points are split by coarse cell
-    (unit_res), each unit PIP-joins independently and commits
+    """The flagship join as a resumable job: the point side is split by its
+    coarse unit cell, each unit PIP-joins independently and commits
     ``out_dir/unit=<cell>/``, then journals. Resume skips completed cells.
+
+    ``points`` carries its unit cell in ``unit_col``, and ``units`` is the
+    set of unit cells it holds: the caller has already materialized the
+    point side and learned both from one ``groupBy(unit).count()``. This
+    function neither persists nor unpersists the caller's frame.
 
     ``expected_units``: unit cells the caller knows are invalidated even if
     the (filtered) point set no longer reaches them — an append diff that
     moves or removes a cell's last points must still overwrite that cell's
     stale ``unit=<cell>/`` output (with an empty one), or stored pairs
     diverge from a full recompute.
-
-    ``unit_col`` + ``units``: callers that already materialized the point
-    side WITH its unit column (and learned the unit set from their own
-    materialize action — one ``groupBy(unit).count()`` yields row count and
-    unit list together) pass both to skip this function's own persist and
-    unit-discovery pass. Measured at 96M points through the 4-executor
-    topology, the default path costs a SECOND full-size cache of the point
-    set (the ``withColumn`` persist below — double memory plus a fill pass)
-    and a whole-cache distinct scan (124-488 task-seconds) before the first
-    unit starts. With ``unit_col`` set, this function neither persists nor
-    unpersists the caller's frame.
     """
     from pyspark.sql import functions as F
 
-    from pgosm_flex_spark.index import cells
+    # imported at call time: a tracer that patches these module attributes
+    # reaches this caller only through a call-time lookup
     from pgosm_flex_spark.operators.pip_join import (
         build_polygon_cover,
         cover_res_levels,
@@ -196,45 +188,20 @@ def checkpointed_pip_join(
     )
 
     cp = Checkpointer(path=out_dir, job_id=job_id)
-    if unit_col is not None:
-        if units is None:
-            raise ValueError("unit_col requires units (the caller knows them)")
-        pts = points.withColumnRenamed(unit_col, "__unit")
-        units = {str(u) for u in units}
-    else:
-        pts = points.withColumn(
-            "__unit", cells.cell_col(F.col("lon"), F.col("lat"), unit_res)
-        ).persist()
-        units = {str(r["__unit"]) for r in pts.select("__unit").distinct().collect()}
+    pts = points.withColumnRenamed(unit_col, "__unit")
+    units = {str(u) for u in units}
     if expected_units is not None:
         units |= set(expected_units)
     cover = build_polygon_cover(polygons).persist()
-    # ONE materialize pass also yields the broadcast-strategy stats: rows +
-    # boundary wkb bytes decide broadcast vs the salted shuffle fallback
-    # (pip_join.should_broadcast_cover). A world/polygon set large enough to
-    # blow the broadcast (measured: 337k polygons → 32M-row / 1 GB cover →
-    # 590 s at 48M points) must co-partition by cell instead; callers can
-    # still force either mode by passing broadcast_cover explicitly.
-    cstats = cover.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.length("geom_wkb")).alias("b"),
-    ).collect()[0]
-    if "broadcast_cover" not in pip_kwargs:
-        from pgosm_flex_spark.operators.pip_join import should_broadcast_cover
-
-        pip_kwargs = dict(pip_kwargs)
-        pip_kwargs["broadcast_cover"] = should_broadcast_cover(
-            cstats["n"], cstats["b"]
-        )
-    # resolve the cover's resolution levels ONCE — per-unit pip_join calls
-    # would otherwise each run a collect job just to rediscover them
+    # resolve the cover's resolution levels ONCE (this collect also fills
+    # the persisted cover) — per-unit pip_join calls would otherwise each
+    # run a collect job just to rediscover them
     levels = cover_res_levels(cover)
 
     def process(unit: str) -> dict:
         sub = pts.filter(F.col("__unit") == int(unit))
         pairs = pip_join(
-            sub, polygons, point_cols=point_cols, cover=cover,
-            res_levels=levels, **pip_kwargs,
+            sub, polygons, point_cols=point_cols, cover=cover, res_levels=levels
         )
         target = os.path.join(out_dir, f"unit={unit}")
         pairs.write.mode("overwrite").parquet(target)
@@ -245,8 +212,6 @@ def checkpointed_pip_join(
             # would otherwise be journaled completed with a wrong metric
         return {"pairs": n}
 
-    results = cp.run_units(spark, sorted(units), process, max_parallel=max_parallel)
-    if unit_col is None:  # the caller owns its own persist otherwise
-        pts.unpersist(blocking=False)
+    results = cp.run_units(spark, sorted(units), process)
     cover.unpersist(blocking=False)
     return results

@@ -178,9 +178,9 @@ def export_bundle_routed(
     many cells that is a small-file explosion no metastore enjoys. Setting it
     adds ONE clustering shuffle keyed (layer_table, cell_p, salt<k) so each
     partition dir receives at most k files, with hot (table, cell) dirs still
-    spread over k writers (the salt bounds skew the way pip_join's salted
-    fallback does). One shuffle traded against 45 source scans is the same
-    bargain the router itself makes. ``None`` disables (tiny inputs/tests).
+    spread over k writers (the salt bounds skew). One shuffle traded against
+    45 source scans is the same bargain the router itself makes. ``None``
+    disables (tiny inputs/tests).
 
     Manifest shape matches :func:`export_bundle` (plus ``routed: True``);
     per-table counts come from the written parquet's partition/metadata
@@ -281,25 +281,6 @@ def export_bundle_routed(
     return manifest
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 32,
-    sort_col: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist a table bucketed (and optionally sorted) on a key — the
-    co-located-join layout: two tables bucketed the same way join with NO
-    shuffle on either side (SortMergeJoin reads bucket files directly). The
-    cell column is the natural bucket key for repeated spatial joins; at
-    Iceberg this maps to a bucket partition transform."""
-    w = df.write.mode(mode).bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(table)
-
-
 def merge_into_partitioned(
     spark: SparkSession,
     target_dir: str,
@@ -353,150 +334,3 @@ def merge_into_partitioned(
         return {"touched_partitions": len(touched), "upserted_rows": n_up}
     finally:
         updates.unpersist(blocking=False)
-
-
-def refresh_partitions(
-    spark: SparkSession,
-    target_dir: str,
-    replacement: DataFrame,
-    partition_col: str = "cell_p",
-    expected_partitions: list | None = None,
-) -> int:
-    """Partition-scoped REFRESH: every partition present in ``replacement``
-    is replaced wholesale (rows absent from the replacement disappear — the
-    semantics of the reference's append-finish derived-artifact rebuild,
-    replication_functions.sql:22-38); untouched partitions' files stay.
-    The Iceberg mapping is ``REPLACE WHERE``/dynamic overwrite.
-
-    ``expected_partitions``: partition values the caller knows are
-    invalidated. Dynamic overwrite only replaces partitions PRESENT in the
-    replacement, so an invalidated partition whose replacement is empty
-    would keep its stale files — those directories are deleted explicitly.
-    """
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        materialized = replacement.localCheckpoint(eager=True)
-        n = materialized.count()
-        materialized.write.mode("overwrite").partitionBy(partition_col).parquet(
-            target_dir
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    if expected_partitions:
-        import shutil
-
-        present = {
-            r[0] for r in materialized.select(partition_col).distinct().collect()
-        }
-        for p in set(expected_partitions) - present:
-            d = os.path.join(target_dir, f"{partition_col}={p}")
-            if os.path.isdir(d):
-                shutil.rmtree(d)
-    return n
-
-
-def split_sql_statements(text: str) -> list[str]:
-    """Split a script into statements on ';', respecting single/double-quoted
-    strings (with '' / "" escapes), `backtick` identifiers, -- line comments
-    and /* block comments — a naive split breaks any literal containing ';'."""
-    stmts: list[str] = []
-    buf: list[str] = []
-    i, n = 0, len(text)
-    state = None  # None | "'" | '"' | '`' | '--' | '/*'
-    while i < n:
-        ch = text[i]
-        nxt = text[i + 1] if i + 1 < n else ""
-        if state is None:
-            if ch == ";":
-                stmts.append("".join(buf))
-                buf = []
-                i += 1
-                continue
-            if ch in ("'", '"', "`"):
-                state = ch
-            elif ch == "-" and nxt == "-":
-                state = "--"
-            elif ch == "/" and nxt == "*":
-                state = "/*"
-        elif state in ("'", '"'):
-            if ch == state:
-                # doubled quote is an escaped quote, stay in the string
-                if nxt == state:
-                    buf.append(ch)
-                    i += 1
-                    ch = nxt
-                else:
-                    state = None
-        elif state == "`":
-            if ch == "`":
-                state = None
-        elif state == "--":
-            if ch == "\n":
-                state = None
-        elif state == "/*":
-            if ch == "*" and nxt == "/":
-                buf.append(ch)
-                i += 1
-                ch = nxt
-                state = None
-        buf.append(ch)
-        i += 1
-    stmts.append("".join(buf))
-    # drop empty AND comment-only segments: a trailing '-- end of deploy'
-    # after the final ';' is not a statement — spark.sql('-- ...') raises
-    # PARSE_EMPTY_STATEMENT and would fail a deploy whose every real
-    # statement succeeded
-    return [
-        s for s in (st.strip() for st in stmts)
-        if s and _strip_sql_comments(s).strip()
-    ]
-
-
-def _strip_sql_comments(stmt: str) -> str:
-    """Remove -- line and /* block comments (outside string/backtick
-    literals) so comment-only segments can be detected."""
-    out: list[str] = []
-    i, n = 0, len(stmt)
-    state = None  # None | "'" | '"' | '`'
-    while i < n:
-        ch = stmt[i]
-        nxt = stmt[i + 1] if i + 1 < n else ""
-        if state is None:
-            if ch == "-" and nxt == "-":
-                while i < n and stmt[i] != "\n":
-                    i += 1
-                continue
-            if ch == "/" and nxt == "*":
-                i += 2
-                while i + 1 < n and not (stmt[i] == "*" and stmt[i + 1] == "/"):
-                    i += 1
-                i += 2
-                continue
-            if ch in ("'", '"', "`"):
-                state = ch
-        elif state in ("'", '"') and ch == state:
-            if nxt == state:  # doubled-quote escape stays in the string
-                out.append(ch)
-                i += 1
-                ch = nxt
-            else:
-                state = None
-        elif state == "`" and ch == "`":
-            state = None
-        out.append(ch)
-        i += 1
-    return "".join(out)
-
-
-def run_sql_scripts(spark: SparkSession, scripts: list[str], schema_name: str) -> None:
-    """Deploy-script runner with {schema_name} templating — SURVEY.md S5
-    (/root/reference/docker/db.py:437-463 runs DDL files with schema
-    substitution; flex-config/run-sql.lua:39-92 rewrites 'osm.' prefixes)."""
-    for text in scripts:
-        # targeted placeholder replace, NOT str.format: a literal brace in
-        # the SQL (JSON default, regex quantifier '[0-9]{2}') must pass
-        # through untouched instead of raising KeyError / mangling '{{'
-        templated = text.replace("{schema_name}", schema_name)
-        for stmt in split_sql_statements(templated):
-            spark.sql(stmt)

@@ -6,23 +6,16 @@ derived artifacts (append start truncates the nested table,
 refreshes the subdivide matview and rebuilds nesting, lines 22-38). Late data
 is handled by full-refresh of derived artifacts, not watermarks — the Spark
 analog keeps that contract: idempotent per-cell recompute keyed by which
-cells the diff touched.
-
-Also provides a Structured Streaming ingest: a file-source stream of point
-rows assigned to tiles with event-time windows + watermark, merged per batch
-via foreachBatch — the streaming-native path for continuously arriving
-images.
+cells the diff touched (the append mode of jobs/import_job.py recomputes the
+containment join's units for exactly these cells).
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pgosm_flex_spark.index import cells
-from pgosm_flex_spark.operators.pip_join import pip_join
 
 
 def affected_cells(diff_points: DataFrame, res: int = 6) -> DataFrame:
@@ -31,109 +24,4 @@ def affected_cells(diff_points: DataFrame, res: int = 6) -> DataFrame:
         diff_points.select(
             cells.cell_col(F.col("lon"), F.col("lat"), res).alias("cell")
         ).distinct()
-    )
-
-
-def incremental_pip_refresh(
-    spark: SparkSession,
-    all_points: DataFrame,
-    diff_points: DataFrame,
-    polygons: DataFrame,
-    prev_pairs: DataFrame,
-    point_cols: list[str],
-    res: int = 6,
-) -> DataFrame:
-    """Recompute PIP pairs only for cells the diff touched; untouched cells'
-    pairs stream through unchanged (I2/I3 semantics: derived artifacts are
-    invalidated per affected region and rebuilt, not patched row-wise)."""
-    touched = affected_cells(diff_points, res)
-    pts_cell = all_points.withColumn(
-        "__cell", cells.cell_col(F.col("lon"), F.col("lat"), res)
-    )
-    affected_pts = pts_cell.join(F.broadcast(touched), pts_cell["__cell"] == touched["cell"]).drop(
-        "cell", "__cell"
-    )
-    recomputed = pip_join(affected_pts, polygons, point_cols=point_cols)
-
-    key = point_cols[0]
-    # invalidate stale pairs two ways:
-    #  - by cell: any prev pair whose stored location falls in a touched cell
-    #    (the per-region rebuild contract)
-    #  - by id:   any prev pair whose point id appears in the diff. A diff
-    #    that carries only the NEW coordinates of a moved point (or only the
-    #    id of a deleted one) does not touch the OLD location's cell, so the
-    #    cell rule alone would keep the stale pair forever. Callers that
-    #    pass old+new rows per change (the replication-diff convention) are
-    #    covered by either rule; both conventions now yield a full-recompute
-    #    match.
-    diff_ids = diff_points.select(key).distinct()
-    prev_cell = prev_pairs.withColumn(
-        "__cell", cells.cell_col(F.col("lon"), F.col("lat"), res)
-    )
-    kept = (
-        prev_cell.join(
-            F.broadcast(touched), prev_cell["__cell"] == touched["cell"], "left_anti"
-        )
-        .join(F.broadcast(diff_ids), key, "left_anti")
-        .drop("__cell")
-    )
-    # recomputed pairs need lon/lat re-attached for future refreshes
-    coords = all_points.select(key, "lon", "lat")
-    recomputed_full = recomputed.join(coords, key)
-    return kept.unionByName(recomputed_full.select(*prev_pairs.columns))
-
-
-def stream_tile_counts(
-    spark: SparkSession,
-    input_dir: str,
-    checkpoint_dir: str,
-    output_dir: str,
-    zoom: int = 12,
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-):
-    """File-source Structured Stream: JSON point rows (ts, lon, lat) →
-    watermarked event-time windows × z/x/y tile counts, MERGE-upserted to
-    parquet per micro-batch keyed by (window_start, x, y) — update mode
-    re-emits a window every time late-but-in-watermark data changes its
-    count, so a blind append would leave one row per emission and a consumer
-    summing ``n`` would overcount. Output is partitioned by ``w_p``
-    (window-start minute). Returns the StreamingQuery (caller awaits/stops)."""
-    from pgosm_flex_spark.index.tiles import tile_x_col, tile_y_col
-
-    schema = "ts timestamp, lon double, lat double, image_id string"
-    stream = spark.readStream.schema(schema).json(input_dir)
-    tiled = (
-        stream.withWatermark("ts", watermark)
-        .withColumn("x", tile_x_col(F.col("lon"), zoom))
-        .withColumn("y", tile_y_col(F.col("lat"), zoom))
-        .groupBy(F.window("ts", window).alias("w"), "x", "y")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "x", "y", "n",
-        )
-    )
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        from pgosm_flex_spark.sinks import merge_into_partitioned
-
-        upd = batch_df.withColumn(
-            "w_p", F.date_format(F.col("window_start"), "yyyyMMddHHmm")
-        )
-        merge_into_partitioned(
-            batch_df.sparkSession,
-            output_dir,
-            upd,
-            key_cols=["window_start", "x", "y"],
-            partition_col="w_p",
-        )
-
-    return (
-        tiled.writeStream.outputMode("update")
-        .foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )

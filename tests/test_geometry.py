@@ -113,12 +113,6 @@ def test_cell_roundtrip_and_parent():
     assert (px == (x >> 4)).all()
 
 
-def test_kring_counts():
-    c = cells.cells_of_points(np.array([-77.0]), np.array([38.9]), 10)[0]
-    assert len(cells.kring(int(c), 1)) == 9
-    assert len(cells.kring(int(c), 2)) == 25
-
-
 def test_covering_square_interior_and_boundary():
     # square covering several cells at res 12 near DC
     g = wkb.decode(wkb.encode_polygon([square(-77.10, 38.80, -76.95, 38.95)]))

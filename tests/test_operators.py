@@ -333,6 +333,12 @@ KNN_INPUTS = {
     "lat85_ring_row_b": partial(
         _one_point_knn_input, (0.0, 85.0), [(44.0, 79.9), (-22.0, 79.9), (40.0, 80.0)]
     ),
+    # a point at 84° N whose nearest feature (722 km) lies across the pole,
+    # beyond three features about 4° equatorward (770-786 km)
+    "across_pole": partial(
+        _one_point_knn_input, (0.0, 84.0),
+        [(44.0, 80.0), (44.5, 80.2), (43.5, 79.9), (-170.0, 89.5)],
+    ),
 }
 
 
@@ -346,17 +352,6 @@ def test_knn_adaptive_matches_brute_force(spark, case):
     ).toPandas()
     assert len(got) == len(pts_pd) * 3
     _assert_brute_force_knn(got, pts_pd, feats_pd)
-
-
-def test_pip_shuffle_salted_matches_broadcast(world, points, spark):
-    """The salted shuffle fallback must produce the identical pair set."""
-    pts_df, _ = points
-    polys = world["place_polygon"].filter(F.col("osm_id") > 0)
-    bc = pip_join(pts_df, polys, point_cols=["image_id"])
-    sh = pip_join(pts_df, polys, point_cols=["image_id"], broadcast_cover=False, salt=4)
-    got_bc = {(r["image_id"], r["osm_id"]) for r in bc.collect()}
-    got_sh = {(r["image_id"], r["osm_id"]) for r in sh.collect()}
-    assert got_bc == got_sh and len(got_bc) > 0
 
 
 def test_pip_join_explicit_res_levels_matches_probe(world, points, spark):

@@ -207,16 +207,6 @@ def test_cell_roundtrip_bounds_and_parent(lon, lat, res, up):
     )[0]
 
 
-@settings(max_examples=60, deadline=None)
-@given(lon=lon_s, lat=lat_s, res=st.integers(2, 16), k=st.integers(0, 3))
-def test_kring_contains_center_and_is_unique(lon, lat, res, k):
-    cell = int(cells.cells_of_points(np.array([lon]), np.array([lat]), res)[0])
-    ring = cells.kring(cell, k)
-    assert cell in set(ring.tolist())
-    assert len(set(ring.tolist())) == len(ring)
-    assert len(ring) <= (2 * k + 1) ** 2
-
-
 # ---------------------------------------------------------------------------
 # pigeonhole banding losslessness (the dedup-ladder candidate guarantee)
 # ---------------------------------------------------------------------------

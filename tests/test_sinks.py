@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from pgosm_flex_spark import fixtures
 from pgosm_flex_spark.layers import build_layer_tables
-from pgosm_flex_spark.sinks import export_bundle, run_sql_scripts, write_layer_table
+from pgosm_flex_spark.sinks import export_bundle, write_layer_table
 from pgosm_flex_spark.sources.lookup import pgosm_road
 
 
@@ -78,51 +78,12 @@ def test_export_bundle_write_manifest_false_leaves_no_marker(spark, tmp_path):
     assert any(out.iterdir())
 
 
-def test_run_sql_scripts_templating(spark):
-    run_sql_scripts(
-        spark,
-        [
-            "CREATE DATABASE IF NOT EXISTS {schema_name}",
-            "CREATE TABLE {schema_name}.t_sql_deploy (a INT) USING parquet;"
-            "INSERT INTO {schema_name}.t_sql_deploy VALUES (1), (2)",
-        ],
-        schema_name="osm_test",
-    )
-    assert spark.sql("SELECT count(*) FROM osm_test.t_sql_deploy").collect()[0][0] == 2
-    spark.sql("DROP TABLE osm_test.t_sql_deploy")
-    spark.sql("DROP DATABASE osm_test")
-
-
 def test_pgosm_road_golden_count(spark):
     # tests/sql/pgosm_road_row_count.sql golden: 25 rows
     df = pgosm_road(spark)
     assert df.count() == 25
     mph = {r["osm_type"]: r["maxspeed_mph"] for r in df.collect()}
     assert mph["motorway"] == 65.0  # 104.60736 km/h / 1.609344
-
-
-def test_split_sql_statements_quotes_and_comments():
-    from pgosm_flex_spark.sinks import split_sql_statements
-
-    stmts = split_sql_statements(
-        "SELECT 'a;b' AS x; -- trailing; comment\n"
-        "SELECT \"q;\" FROM t /* block; comment */; SELECT 'it''s;ok'"
-    )
-    assert len(stmts) == 3
-    assert stmts[0] == "SELECT 'a;b' AS x"
-    assert "block; comment" in stmts[1]
-    assert stmts[2] == "SELECT 'it''s;ok'"
-
-
-def test_run_sql_scripts_semicolon_in_literal(spark):
-    from pgosm_flex_spark.sinks import run_sql_scripts
-
-    run_sql_scripts(
-        spark,
-        ["CREATE OR REPLACE TEMP VIEW v_semi AS SELECT 'a;b' AS s; SELECT * FROM v_semi"],
-        schema_name="unused",
-    )
-    assert spark.sql("SELECT s FROM v_semi").collect()[0][0] == "a;b"
 
 
 def test_merge_into_partitioned_upsert(spark, tmp_path):
@@ -162,50 +123,6 @@ def test_merge_into_partitioned_upsert(spark, tmp_path):
     # untouched partition's files were not rewritten
     for f, mt in untouched_files.items():
         assert os.path.exists(f) and os.path.getmtime(f) == mt
-
-
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """Two tables bucketed on the same cell key must join with ZERO
-    exchanges — the co-located layout for repeated spatial joins."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pgosm_flex_spark.index import cells
-    from pgosm_flex_spark.sinks import write_bucketed
-
-    from pgosm_flex_spark import fixtures
-
-    pdf = pd.DataFrame(
-        {
-            "image_id": [f"i{i}" for i in range(2000)],
-            "lon": [fixtures.point_lonlat(i)[0] for i in range(2000)],
-            "lat": [fixtures.point_lonlat(i)[1] for i in range(2000)],
-        }
-    )
-    pts = spark.createDataFrame(pdf).withColumn(
-        "cell", cells.cell_col(F.col("lon"), F.col("lat"), 10)
-    )
-    feats = spark.createDataFrame(pdf.iloc[:500].assign(fid=range(500))).withColumn(
-        "cell", cells.cell_col(F.col("lon"), F.col("lat"), 10)
-    )
-    spark.sql("DROP TABLE IF EXISTS b_pts")
-    spark.sql("DROP TABLE IF EXISTS b_feats")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    write_bucketed(pts, "b_pts", "cell", n_buckets=8, sort_col="cell")
-    write_bucketed(feats.select("fid", "cell"), "b_feats", "cell", n_buckets=8, sort_col="cell")
-    try:
-        # disable auto-broadcast so the join would otherwise shuffle
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        a = spark.table("b_pts")
-        b = spark.table("b_feats")
-        joined = a.join(b, "cell")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan, plan[:1500]
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.sql("DROP TABLE IF EXISTS b_pts")
-        spark.sql("DROP TABLE IF EXISTS b_feats")
 
 
 def test_export_bundle_routed_parity(spark, tmp_path):
@@ -276,43 +193,6 @@ def test_export_bundle_routed_empty_source(spark, tmp_path):
     )
     assert m["routed"] is True
     assert m["tables"] and all(v == 0 for v in m["tables"].values())
-
-
-def test_run_sql_scripts_literal_braces_pass_through(spark):
-    """Regression: str.format templating raised KeyError/IndexError on any
-    literal brace in the SQL (regex quantifier, JSON default) and silently
-    rewrote '{{' to '{'. Templating is now a targeted placeholder replace."""
-    run_sql_scripts(
-        spark,
-        [
-            "CREATE OR REPLACE TEMP VIEW {schema_name}_braces AS "
-            "SELECT regexp_replace('ab12cd', '[0-9]{2}', '#') AS r, "
-            "'{\"a\": 1}' AS j, '{{literal}}' AS dbl",
-        ],
-        schema_name="vbr",
-    )
-    row = spark.sql("SELECT r, j, dbl FROM vbr_braces").collect()[0]
-    assert row["r"] == "ab#cd"
-    assert row["j"] == '{"a": 1}'
-    assert row["dbl"] == "{{literal}}"
-
-
-def test_split_sql_statements_drops_comment_only_segments(spark):
-    from pgosm_flex_spark.sinks import split_sql_statements
-
-    stmts = split_sql_statements(
-        "SELECT 1;\n-- end of deploy\n"
-    )
-    assert stmts == ["SELECT 1"]
-    stmts = split_sql_statements(
-        "/* header */ SELECT 2; /* footer only */;\n--tail"
-    )
-    assert len(stmts) == 1 and "SELECT 2" in stmts[0]
-    # a comment-only SCRIPT is a no-op, not a ParseException
-    run_sql_scripts(spark, ["-- nothing to do\n"], schema_name="unused")
-    # but comments inside a real statement ride through
-    stmts = split_sql_statements("SELECT 3 -- inline\n;")
-    assert stmts == ["SELECT 3 -- inline"]
 
 
 def test_routed_3857_overrides_projected_in_sink(spark, tmp_path):

@@ -1,5 +1,5 @@
-"""Structured Streaming end-to-end: windowed tile counts and the stateful
-first-seen dedup, both driven through real readStream/writeStream with
+"""Structured Streaming end-to-end: the stateful first-seen dedup and the
+stream import, both driven through real readStream/writeStream with
 availableNow triggers (SURVEY.md §2.8)."""
 
 from __future__ import annotations
@@ -8,11 +8,9 @@ import glob
 import json
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from pgosm_flex_spark import fixtures
-from pgosm_flex_spark.streaming.incremental import stream_tile_counts
 from pgosm_flex_spark.streaming.stateful import run_first_seen_stream
 
 
@@ -21,41 +19,6 @@ def _write_json(path: str, rows: list[dict]) -> None:
     with open(path, "w") as f:
         for r in rows:
             f.write(json.dumps(r) + "\n")
-
-
-def test_stream_tile_counts_matches_batch(spark, tmp_path):
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    rows = []
-    for i in range(500):
-        lon, lat = fixtures.point_lonlat(i)
-        rows.append(
-            {
-                "ts": f"2026-08-16T10:{i % 50:02d}:00",
-                "lon": lon,
-                "lat": lat,
-                "image_id": f"i{i}",
-            }
-        )
-    _write_json(os.path.join(inp, "batch1.json"), rows)
-
-    q = stream_tile_counts(spark, inp, ckpt, out, zoom=12, window="10 minutes")
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(out)
-    # batch oracle: same tiling + windowing on a static frame
-    from pgosm_flex_spark.index.tiles import tile_x_col, tile_y_col
-
-    static = spark.read.schema("ts timestamp, lon double, lat double, image_id string").json(inp)
-    exp = (
-        static.withColumn("x", tile_x_col(F.col("lon"), 12))
-        .withColumn("y", tile_y_col(F.col("lat"), 12))
-        .groupBy(F.window("ts", "10 minutes").alias("w"), "x", "y")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    assert got.agg(F.sum("n")).collect()[0][0] == 500
-    assert got.count() == exp.count()
 
 
 def test_stream_first_seen_dedup_across_restarts(spark, tmp_path):
@@ -86,44 +49,6 @@ def test_stream_first_seen_dedup_across_restarts(spark, tmp_path):
     got2 = {r["phash"]: r["image_id"] for r in spark.read.parquet(out).collect()}
     assert got2 == {**got1, 6: "k6"}
     assert len(glob.glob(os.path.join(ckpt, "state", "*"))) > 0
-
-
-def test_stream_tile_counts_drops_data_behind_watermark(spark, tmp_path):
-    """Watermark semantics across restarts: run 1 advances the watermark;
-    a run-2 row older than it is dropped from the aggregation, while a fresh
-    row lands."""
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    lon, lat = fixtures.point_lonlat(1)
-
-    # run 1: events 10:00..11:00 -> watermark advances to ~10:30 (30 min)
-    _write_json(
-        os.path.join(inp, "b1.json"),
-        [
-            {"ts": f"2026-08-16T10:{m:02d}:00", "lon": lon, "lat": lat, "image_id": f"a{m}"}
-            for m in (0, 20, 40)
-        ]
-        + [{"ts": "2026-08-16T11:00:00", "lon": lon, "lat": lat, "image_id": "max"}],
-    )
-    q = stream_tile_counts(spark, inp, ckpt, out, zoom=12, window="10 minutes")
-    q.awaitTermination(120)
-
-    # run 2 (same checkpoint): one row far behind the watermark, one fresh
-    _write_json(
-        os.path.join(inp, "b2.json"),
-        [
-            {"ts": "2026-08-16T09:00:00", "lon": lon, "lat": lat, "image_id": "late"},
-            {"ts": "2026-08-16T11:05:00", "lon": lon, "lat": lat, "image_id": "fresh"},
-        ],
-    )
-    q2 = stream_tile_counts(spark, inp, ckpt, out, zoom=12, window="10 minutes")
-    q2.awaitTermination(120)
-
-    got = spark.read.parquet(out)
-    starts = {str(r["window_start"]) for r in got.select("window_start").collect()}
-    assert not any("09:00" in s for s in starts), starts  # late row dropped
-    assert any("11:00" in s for s in starts), starts      # fresh row landed
 
 
 def test_stream_import_two_rounds_with_restart_equals_batch(spark, tmp_path):
@@ -173,36 +98,6 @@ def test_stream_import_two_rounds_with_restart_equals_batch(spark, tmp_path):
     assert got.count() == exp.count()
     assert got.exceptAll(exp).count() == 0
     assert exp.exceptAll(got).count() == 0
-
-
-def test_stream_tile_counts_update_reemission_merges_not_appends(spark, tmp_path):
-    """Regression: update-mode re-emission of a window whose count grew was
-    blindly appended, leaving one row per emission for the same
-    (window_start, x, y) — a consumer summing n overcounted."""
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    lon, lat = fixtures.point_lonlat(1)
-
-    _write_json(
-        os.path.join(inp, "b1.json"),
-        [{"ts": "2026-08-16T11:00:00", "lon": lon, "lat": lat, "image_id": "a"}],
-    )
-    q = stream_tile_counts(spark, inp, ckpt, out, zoom=12, window="10 minutes")
-    q.awaitTermination(120)
-
-    # same window gains a second row in a later run -> update re-emits n=2
-    _write_json(
-        os.path.join(inp, "b2.json"),
-        [{"ts": "2026-08-16T11:01:00", "lon": lon, "lat": lat, "image_id": "b"}],
-    )
-    q2 = stream_tile_counts(spark, inp, ckpt, out, zoom=12, window="10 minutes")
-    q2.awaitTermination(120)
-
-    got = spark.read.parquet(out)
-    # exactly one row per key, carrying the UPDATED count
-    assert got.count() == 1
-    assert got.collect()[0]["n"] == 2
 
 
 def test_stream_first_seen_string_key(spark, tmp_path):
