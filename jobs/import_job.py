@@ -101,7 +101,7 @@ def main() -> int:
     from pgosm_flex_spark.functions.scalars import resolve_language
     from pgosm_flex_spark.layers.registry import resolve_layerset_path
     from pgosm_flex_spark.geometry.srid import _check_srid
-    from pgosm_flex_spark.session import get_spark
+    from pgosm_flex_spark.session import ARCHIVE_CONF, get_spark
     from pgosm_flex_spark.sinks import export_bundle
 
     # fail fast: an unsupported SRID must die in milliseconds, not after
@@ -428,6 +428,9 @@ def main() -> int:
     manifest["language"] = language or ""
     manifest["input_file"] = args.input
     manifest["import_mode"] = args.mode
+    # how this session's driver JVM started: "mapped", "dumping" (the one
+    # slower run that records the class archive) or "off:<reason>"
+    manifest["class_archive"] = spark.conf.get(ARCHIVE_CONF, "off:jvm-running")
     # library-mode hygiene: nothing stays pinned in executor memory at exit
     osm.unpersist(blocking=False)
     pts.unpersist(blocking=False)

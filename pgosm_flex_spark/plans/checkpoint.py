@@ -30,6 +30,8 @@ from dataclasses import dataclass
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
+MAX_CONCURRENT_UNITS = 4
+
 JOURNAL_SCHEMA = (
     "job_id string, unit string, status string, engine_version string, "
     "metrics string, started_at double, finished_at double, run_id string"
@@ -105,7 +107,6 @@ class Checkpointer:
         spark: SparkSession,
         units: Iterable[str],
         process: Callable[[str], dict],
-        max_parallel: int = 4,
     ) -> dict[str, dict]:
         """Process every unit not yet journaled as completed.
 
@@ -116,12 +117,11 @@ class Checkpointer:
         writes ⇒ exactly-once results, the same guarantee the reference gets
         from per-batch COMMIT.
 
-        Units dispatch from a thread pool (``max_parallel`` concurrent Spark
-        jobs): a strictly sequential loop leaves the cluster idle during each
-        unit's scheduling/commit tail, which at 4N executors turns into the
-        dominant cost. Spark's scheduler interleaves the concurrent jobs'
-        stages across all cores; set ``max_parallel=1`` for the reference's
-        strictly-serial batch-loop behavior.
+        Units dispatch from a thread pool (``MAX_CONCURRENT_UNITS``
+        concurrent Spark jobs): a strictly sequential loop leaves the cluster
+        idle during each unit's scheduling/commit tail, which at 4N
+        executors turns into the dominant cost. Spark's scheduler
+        interleaves the concurrent jobs' stages across all cores.
         """
         done = self.completed_units(spark)
         results: dict[str, dict] = {}
@@ -140,11 +140,11 @@ class Checkpointer:
                 results[unit] = {"skipped": True}
             else:
                 todo.append(unit)
-        if max_parallel <= 1 or len(todo) <= 1:
+        if len(todo) <= 1:
             for unit in todo:
                 run_one(unit)
         else:
-            with ThreadPoolExecutor(max_workers=max_parallel) as ex:
+            with ThreadPoolExecutor(max_workers=MAX_CONCURRENT_UNITS) as ex:
                 futures = [ex.submit(run_one, u) for u in todo]
                 for f in futures:
                     f.result()  # re-raise the first failure
