@@ -83,12 +83,8 @@ def main() -> int:
         "every job section data-proportional (the scaling-measurement lever; "
         "1 = the unscaled fixture world)",
     )
-    p.add_argument(
-        "--routed-export",
-        action="store_true",
-        help="export via the single-scan router (one source pass writes all "
-        "tables partitioned by layer_table) instead of one write per table",
-    )
+    # the routed bundle is the only layout; the flag is accepted and ignored
+    p.add_argument("--routed-export", action="store_true", help=argparse.SUPPRESS)
     args = p.parse_args()
 
     from pgosm_flex_spark import __version__, fixtures
@@ -102,7 +98,7 @@ def main() -> int:
     from pgosm_flex_spark.layers.registry import resolve_layerset_path
     from pgosm_flex_spark.geometry.srid import _check_srid
     from pgosm_flex_spark.session import ARCHIVE_CONF, get_spark
-    from pgosm_flex_spark.sinks import export_bundle
+    from pgosm_flex_spark.sinks import export_bundle, write_layer_table
 
     # fail fast: an unsupported SRID must die in milliseconds, not after
     # the containment join has run for hours inside the export thread
@@ -208,20 +204,24 @@ def main() -> int:
             language=language,
         )
         # 4. post-processing: relation dedup always precedes the join (it
-        # defines the place_polygon table); the nested rebuild runs on fresh
-        # imports (run_post_sql) AND at append finish (I3 —
+        # defines the place_polygon table). Persisted lazily: the cover
+        # build, the export and the nested rebuild all read it, and the
+        # first of them fills the cache instead of each re-running the
+        # anti-join. The nested rebuild runs on fresh imports
+        # (run_post_sql) AND at append finish (I3 —
         # replication_functions.sql:22-38 refreshes derived artifacts after
-        # applying a diff). The rebuild is lazy: its cost lands in the
-        # export that writes place_polygon_nested (the "export_bundle"
+        # applying a diff). It is lazy too: its cost lands in the write of
+        # place_polygon_nested after the export (the "export_bundle"
         # section).
+        place_polygon = nested = None
         if "place_polygon" in tables:
-            tables["place_polygon"] = relation_member_dedup(tables["place_polygon"])
+            place_polygon = relation_member_dedup(tables["place_polygon"]).persist()
             if not args.skip_nested and (mode.run_post_sql or args.mode == "append"):
-                tables["place_polygon_nested"] = build_nested_admin_polygons(
-                    tables["place_polygon"].filter(F.col("geom_wkb").isNotNull())
+                nested = build_nested_admin_polygons(
+                    place_polygon.filter(F.col("geom_wkb").isNotNull())
                 )
         sections["layer_post_processing"] = round(time.time() - t, 1)
-        return osm, tables
+        return osm, place_polygon, nested
 
     fut_world = pool.submit(build_fixed_world)
     spark.sparkContext.setLocalProperty("spark.scheduler.pool", "points")
@@ -332,43 +332,27 @@ def main() -> int:
 
     # barrier: the join needs place_polygon; a fixed-world failure surfaces
     # here (future re-raises), not as a hung join
-    osm, tables = fut_world.result()
+    osm, place_polygon, nested = fut_world.result()
 
-    # 6 (concurrent with 5). export bundle — routed mode writes every raw
-    # layer table in ONE source scan (layers/router.py); post-processed
-    # tables (deduped place_polygon, derived nested) go through as
-    # overrides either way. Independent of the join's output dir, so it
-    # runs on the fixed-world thread while the join runs here.
+    # 6 (concurrent with 5). export bundle — every layer table in ONE source
+    # scan (layers/router.py), the deduped place_polygon in the same stream;
+    # then the derived nested table in its own dir (no geometry or lon/lat,
+    # so nothing to project). Independent of the join's output dir, so it
+    # runs on the fixed-world thread while the join runs here. The sink
+    # writes no manifest.json: the job writes that completion marker after
+    # the containment join, so a run whose join crashes is not "completed".
     def do_export():
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", "export")
         t = time.time()
-        if args.routed_export:
-            from pgosm_flex_spark.geometry.srid import project_tables
-            from pgosm_flex_spark.sinks import export_bundle_routed
-
-            overrides = {
-                n: tables[n]
-                for n in ("place_polygon", "place_polygon_nested")
-                if n in tables
-            }
-            m = export_bundle_routed(
-                spark, osm, args.out, region=args.region,
-                layerset=args.layerset, pgosm_date=args.date,
-                # override frames are the caller's — project them here; the
-                # routed stream projects inside the sink
-                overrides=project_tables(overrides, args.srid),
-                srid=args.srid,
-                layerset_path=layerset_path, language=language,
-                # the job writes the completion marker itself AFTER the
-                # containment join finishes — an early manifest here would
-                # mark a run whose join later crashed as completed
-                write_manifest=False,
-            )
-        else:
-            m = export_bundle(
-                spark, tables, args.out, region=args.region,
-                layerset=args.layerset, pgosm_date=args.date,
-                write_manifest=False, srid=args.srid,
+        m = export_bundle(
+            spark, osm, args.out, region=args.region,
+            layerset=args.layerset, pgosm_date=args.date, srid=args.srid,
+            layerset_path=layerset_path, language=language,
+            place_polygon=place_polygon,
+        )
+        if nested is not None:
+            m["tables"]["place_polygon_nested"] = write_layer_table(
+                nested, args.out, "place_polygon_nested"
             )
         sections["export_bundle"] = round(time.time() - t, 1)
         return m
@@ -380,8 +364,8 @@ def main() -> int:
     # makes their units recompute while untouched unit dirs persist
     _last = time.time()
     pair_metrics = {}
-    if "place_polygon" in tables:
-        polys = tables["place_polygon"].filter(F.col("geom_wkb").isNotNull())
+    if place_polygon is not None:
+        polys = place_polygon.filter(F.col("geom_wkb").isNotNull())
         pair_metrics = checkpointed_pip_join(
             spark,
             pts.select("image_id", "lon", "lat", "__unit"),
@@ -434,6 +418,8 @@ def main() -> int:
     # library-mode hygiene: nothing stays pinned in executor memory at exit
     osm.unpersist(blocking=False)
     pts.unpersist(blocking=False)
+    if place_polygon is not None:
+        place_polygon.unpersist(blocking=False)
     with open(prior_path, "w") as f:
         json.dump(manifest, f, indent=2, sort_keys=True)
     print(json.dumps({"status": "Completed", **manifest["pip_units"],

@@ -147,14 +147,3 @@ def with_projected(
         out = out.withColumn(geom, reproject_wkb_col(F.col(geom)))
     return out
 
-
-def project_tables(
-    tables: dict[str, DataFrame], srid: int = SRID_WEB_MERCATOR
-) -> dict[str, DataFrame]:
-    """Apply :func:`with_projected` across a layer-table dict (the
-    ``build_layer_tables`` output) — the export-time hook the import job's
-    ``--srid`` flag drives."""
-    _check_srid(srid)
-    if srid == SRID_WGS84:
-        return tables
-    return {name: with_projected(df, srid) for name, df in tables.items()}

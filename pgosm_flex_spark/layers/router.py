@@ -79,10 +79,11 @@ def route_layer_rows(
     the whole dispatch stage: where ``build_layer_tables`` + per-table writes
     scan the source once per table (45 passes at 100 TB), this evaluates all
     membership predicates AND all projections in one whole-stage-codegen
-    pass. Write it ``partitionBy("layer_table")`` (sinks.export_bundle_routed)
-    and each table is a partition-pruned, column-pruned slice with its exact
-    ``build_layer_tables`` schema (``read_layer_table``); absent columns are
-    typed NULLs that parquet stores for free.
+    pass. sinks.export_bundle writes it ``partitionBy("layer_table", ...)``
+    as the export bundle, and each table is a partition-pruned,
+    column-pruned slice with its exact ``build_layer_tables`` schema
+    (``read_layer_table``); absent columns are typed NULLs that parquet
+    stores for free.
 
     Column derivation: per superset column, one CASE over the tables that
     define it, grouped by identical expression text — most columns collapse
@@ -138,9 +139,11 @@ def read_layer_table(
     language: str | None = None,
     srid: int = 4326,
 ):
-    """Reconstruct one table from a routed-parquet bundle: partition-pruned
-    scan + the table's exact column set (schema parity with
-    build_layer_tables output). For a bundle exported with ``srid=3857``
+    """Reconstruct one table from an export bundle's ``routed`` dir:
+    partition-pruned scan + the table's exact column set (schema parity with
+    build_layer_tables output; place_polygon holds the rows the export was
+    given, relation-deduped in the import job). For a bundle exported with
+    ``srid=3857``
     pass the same srid so the projected ``x``/``y`` meter columns survive
     the projection back to the table schema."""
     from pgosm_flex_spark.geometry.srid import _check_srid

@@ -41,7 +41,7 @@ class ImportMode:
     @property
     def append_first_run(self) -> bool:
         """True by default (a plain no-flags run IS a first run); False for
-        replication updates; --update overrides both ways
+        replication updates; --update takes precedence both ways
         (set_append_first_run, helpers.py:349-362)."""
         if self.update is not None:
             return self.update == "create"

@@ -240,9 +240,9 @@ def get_spark(
     run on; on a real cluster the master/executor settings come from
     spark-submit and this factory only applies SQL-level tuning.
 
-    ``extra_conf`` overrides $SPARK_GRAFT_EXTRA_CONF key by key, except
-    ``spark.driver.extraJavaOptions``: the class archive's options, the
-    environment's and ``extra_conf``'s are space-joined in that order.
+    ``extra_conf`` takes precedence over $SPARK_GRAFT_EXTRA_CONF key by key,
+    except ``spark.driver.extraJavaOptions``: the class archive's options,
+    the environment's and ``extra_conf``'s are space-joined in that order.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))

@@ -167,20 +167,48 @@ def test_import_job_leaves_no_persisted_rdds(spark, tmp_path):
 
 
 def test_routed_export_job_writes_routed_bundle(spark, tmp_path):
-    # --routed-export: one routed scan writes the raw tables under routed/,
-    # the deduped place_polygon override writes its own table dir, and the
-    # manifest marks the bundle routed
-    out = str(tmp_path / "routed")
+    # one layout with or without the (ignored) --routed-export flag: every
+    # table, the deduped place_polygon included, lives under routed/ and no
+    # per-table dir is written
+    from pgosm_flex_spark.layers.registry import _wanted_tables
+
+    for flags in ([], ["--routed-export"]):
+        out = str(tmp_path / f"routed{len(flags)}")
+        rc = run_job(
+            ["--out", out, "--n-images", "500", "--layerset", "minimal",
+             "--skip-nested", "--unit-res", "13", *flags]
+        )
+        assert rc == 0
+        manifest = json.load(open(os.path.join(out, "manifest.json")))
+        assert manifest["routed"] is True
+        assert manifest["tables"]["place_polygon"] > 0
+        assert glob.glob(f"{out}/routed/layer_table=place_polygon/**/*.parquet", recursive=True)
+        assert not [n for n in _wanted_tables("minimal") if os.path.exists(f"{out}/{n}")]
+
+
+def test_job_writes_nested_table(spark, tmp_path):
+    # without --skip-nested the job writes the derived place_polygon_nested
+    # beside the routed bundle, built from the deduped place polygons
+    from pgosm_flex_spark.layers import build_layer_tables
+    from pgosm_flex_spark.operators import relation_member_dedup
+    from pgosm_flex_spark.operators.nested import build_nested_admin_polygons
+
+    out = str(tmp_path / "nested")
     rc = run_job(
-        ["--out", out, "--n-images", "500", "--layerset", "minimal",
-         "--skip-nested", "--unit-res", "13", "--routed-export"]
+        ["--out", out, "--n-images", "300", "--layerset", "minimal",
+         "--unit-res", "13"]
     )
     assert rc == 0
     manifest = json.load(open(os.path.join(out, "manifest.json")))
-    assert manifest["routed"] is True
-    assert manifest["tables"]["place_polygon"] > 0
-    assert glob.glob(f"{out}/routed/layer_table=*")
-    assert glob.glob(f"{out}/place_polygon/**/*.parquet", recursive=True)
+    assert os.path.isdir(f"{out}/place_polygon_nested")
+    got = spark.read.parquet(f"{out}/place_polygon_nested")
+    assert got.count() == manifest["tables"]["place_polygon_nested"] > 0
+    polys = relation_member_dedup(
+        build_layer_tables(fixtures.osm_objects_df(spark), layerset="minimal")["place_polygon"]
+    ).filter(F.col("geom_wkb").isNotNull())
+    exp = build_nested_admin_polygons(polys)
+    assert got.exceptAll(exp).count() == 0
+    assert exp.exceptAll(got).count() == 0
 
 
 def test_append_same_date_still_applies_diff(spark, tmp_path):

@@ -1,6 +1,5 @@
 from __future__ import annotations
 
-import json
 import os
 
 import pandas as pd
@@ -51,26 +50,25 @@ def test_export_bundle_manifest(spark, tmp_path):
     osm = fixtures.osm_objects_df(spark)
     tables = build_layer_tables(osm, layerset="minimal")
     manifest = export_bundle(
-        spark, tables, str(tmp_path / "bundle"), region="dc", layerset="minimal",
+        spark, osm, str(tmp_path / "bundle"), region="dc", layerset="minimal",
         pgosm_date="2026-01-01",
     )
     assert manifest["bundle"] == "dc-minimal-2026-01-01"
-    on_disk = json.load(open(tmp_path / "bundle" / "manifest.json"))
-    assert on_disk["tables"] == manifest["tables"]
+    assert manifest["routed"] is True
     assert set(manifest["tables"]) == set(tables)
 
 
-def test_export_bundle_write_manifest_false_leaves_no_marker(spark, tmp_path):
+def test_export_bundle_leaves_no_marker(spark, tmp_path):
     """manifest.json doubles as the completion marker ImportMode.okay_to_run
-    checks: a caller composing the bundle with other concurrent sections
-    (jobs/import_job.py) must be able to defer it, or a crash in a later
-    section leaves a completed-looking bundle behind."""
+    checks: the export never writes it, so a caller composing the bundle
+    with other concurrent sections (jobs/import_job.py) writes it last —
+    otherwise a crash in a later section leaves a completed-looking bundle
+    behind."""
     osm = fixtures.osm_objects_df(spark)
-    tables = build_layer_tables(osm, layerset="minimal")
     out = tmp_path / "bundle_nm"
     manifest = export_bundle(
-        spark, tables, str(out), region="dc", layerset="minimal",
-        pgosm_date="2026-01-01", write_manifest=False,
+        spark, osm, str(out), region="dc", layerset="minimal",
+        pgosm_date="2026-01-01",
     )
     assert manifest["tables"]  # dict still returned in full
     assert not (out / "manifest.json").exists()
@@ -126,68 +124,78 @@ def test_merge_into_partitioned_upsert(spark, tmp_path):
 
 
 def test_export_bundle_routed_parity(spark, tmp_path):
-    """Single-scan routed export must produce the same bundle as the
-    per-table export: identical per-table counts in the manifest, identical
-    rows for a routed table read back via read_layer_table, and the
-    override table (post-processed outside the router) written to its own
-    subdir exactly as export_bundle would."""
+    """The one-scan export holds the same tables as build_layer_tables:
+    equal per-table counts in the manifest, equal rows for a table read back
+    via read_layer_table, and the passed post-processed place_polygon in
+    place of its raw slice, read back the same way."""
     from pgosm_flex_spark.layers.router import read_layer_table
-    from pgosm_flex_spark.sinks import export_bundle_routed
+    from pgosm_flex_spark.operators import relation_member_dedup
 
     osm = fixtures.osm_objects_df(spark)
     tables = build_layer_tables(osm, layerset="minimal")
-    per_table = export_bundle(
-        spark, tables, str(tmp_path / "classic"), region="dc",
-        layerset="minimal", pgosm_date="2026-01-01",
+    pp = relation_member_dedup(tables["place_polygon"])
+    out = tmp_path / "bundle"
+    m = export_bundle(
+        spark, osm, str(out), region="dc", layerset="minimal",
+        pgosm_date="2026-01-01", place_polygon=pp,
     )
-    routed = export_bundle_routed(
-        spark, osm, str(tmp_path / "routed"), region="dc",
-        layerset="minimal", pgosm_date="2026-01-01",
-        overrides={"place_polygon": tables["place_polygon"]},
-    )
-    assert routed["routed"] is True
-    assert routed["tables"] == per_table["tables"]
+    want_counts = {n: df.count() for n, df in tables.items()}
+    want_counts["place_polygon"] = pp.count()
+    assert m["tables"] == want_counts
+    assert pp.count() < tables["place_polygon"].count()  # dedup dropped rows
 
-    back = read_layer_table(
-        spark, str(tmp_path / "routed" / "routed"), "road_major",
-        layerset="minimal",
-    )
-    want = tables["road_major"]
-    assert [f.name for f in back.schema.fields] == [
-        f.name for f in want.schema.fields
-    ]
-    assert back.exceptAll(want).count() == 0
-    assert want.exceptAll(back).count() == 0
-
-    # override slice must NOT appear in the routed stream...
-    routed_tables = {
-        r["layer_table"]
-        for r in spark.read.parquet(str(tmp_path / "routed" / "routed"))
-        .select("layer_table").distinct().collect()
-    }
-    assert "place_polygon" not in routed_tables
-    # ...and its subdir write matches the classic layout
-    pp = spark.read.parquet(str(tmp_path / "routed" / "place_polygon"))
-    assert pp.count() == per_table["tables"]["place_polygon"]
+    for name, want in (("road_major", tables["road_major"]), ("place_polygon", pp)):
+        back = read_layer_table(
+            spark, str(out / "routed"), name, layerset="minimal"
+        )
+        assert [f.name for f in back.schema.fields] == [
+            f.name for f in want.schema.fields
+        ], name
+        assert back.exceptAll(want).count() == 0, name
+        assert want.exceptAll(back).count() == 0, name
+    # every table lives under routed/, none in a per-table dir
+    assert not [n for n in tables if (out / n).exists()]
 
     # output clustering: the salted repartition bounds files per partition
-    # dir at files_per_partition (default 4) — without it a dynamic write
-    # emits one file per task × dir (small-file explosion at scale)
+    # dir at FILES_PER_DIR (4) — without it a dynamic write emits one file
+    # per task × dir (small-file explosion at scale)
     import glob
 
-    for d in glob.glob(str(tmp_path / "routed" / "routed" / "layer_table=*/cell_p=*")):
+    for d in glob.glob(str(out / "routed" / "layer_table=*/cell_p=*")):
         n_files = len(glob.glob(os.path.join(d, "*.parquet")))
         assert 1 <= n_files <= 4, f"{d}: {n_files} files"
 
 
+def test_export_bundle_removes_stale_per_table_dirs(spark, tmp_path):
+    """An export over a bundle in the earlier per-table layout removes the
+    ``<out>/<table>/`` dirs it now writes under routed/, so the bundle never
+    holds two copies of a table."""
+    from pgosm_flex_spark.layers.router import read_layer_table
+    from pgosm_flex_spark.operators import relation_member_dedup
+
+    osm = fixtures.osm_objects_df(spark)
+    pp = relation_member_dedup(
+        build_layer_tables(osm, layerset="minimal")["place_polygon"]
+    )
+    out = tmp_path / "bundle"
+    stale = out / "place_polygon"
+    stale.mkdir(parents=True)
+    pd.DataFrame({"osm_id": [1]}).to_parquet(stale / "part.parquet")
+    m = export_bundle(
+        spark, osm, str(out), region="dc", layerset="minimal",
+        pgosm_date="2026-01-01", place_polygon=pp,
+    )
+    assert not stale.exists()
+    back = read_layer_table(spark, str(out / "routed"), "place_polygon", layerset="minimal")
+    assert back.count() == m["tables"]["place_polygon"] == pp.count() > 0
+
+
 def test_export_bundle_routed_empty_source(spark, tmp_path):
     """An empty source writes zero partition dirs (nothing for parquet to
-    infer a schema from) — the manifest must still land with every table
-    at 0 rows instead of the count read-back throwing."""
-    from pgosm_flex_spark.sinks import export_bundle_routed
-
+    infer a schema from) — the manifest must still list every table at 0
+    rows instead of the count read-back throwing."""
     osm = fixtures.osm_objects_df(spark).filter("osm_id < -999999999")
-    m = export_bundle_routed(
+    m = export_bundle(
         spark, osm, str(tmp_path / "empty"), region="e",
         layerset="minimal", pgosm_date="2026-01-01",
     )
@@ -195,47 +203,28 @@ def test_export_bundle_routed_empty_source(spark, tmp_path):
     assert m["tables"] and all(v == 0 for v in m["tables"].values())
 
 
-def test_routed_3857_overrides_projected_in_sink(spark, tmp_path):
-    """A direct caller passing UNPROJECTED override frames at srid=3857 must
-    still get meter coordinates on disk (the manifest claims EPSG:3857);
-    pre-projected frames (x/y present) pass through un-re-projected; a
-    wkb-only frame of unknowable SRID raises."""
-    import numpy as np
-    import pytest
-
+def test_routed_3857_place_polygon_projected_in_sink(spark, tmp_path):
+    """A passed place_polygon goes through the same projection as the
+    routed stream: at srid=3857 it reads back equal to
+    ``with_projected(pp, 3857)`` (meter x/y and reprojected geom_wkb)."""
     from pgosm_flex_spark.geometry import srid as S
-    from pgosm_flex_spark.sinks import export_bundle_routed
+    from pgosm_flex_spark.layers.router import read_layer_table
+    from pgosm_flex_spark.operators import relation_member_dedup
 
     osm = fixtures.osm_objects_df(spark)
-    tables = build_layer_tables(osm, layerset="minimal")
-    raw = tables["place_point"]
-
-    # unprojected override: the sink projects it
-    export_bundle_routed(
-        spark, osm, str(tmp_path / "a"), region="r", layerset="minimal",
-        pgosm_date="d", srid=3857, files_per_partition=None,
-        overrides={"place_point": raw},
+    pp = relation_member_dedup(
+        build_layer_tables(osm, layerset="minimal")["place_polygon"]
     )
-    got = spark.read.parquet(str(tmp_path / "a" / "place_point"))
-    row = got.filter(F.col("lon").isNotNull()).first()
-    assert row["x"] == pytest.approx(S.R_3857 * np.radians(row["lon"]), rel=1e-12)
-
-    # pre-projected override: byte-identical to the auto-projected write
-    pre = S.with_projected(raw, 3857)
-    export_bundle_routed(
-        spark, osm, str(tmp_path / "b"), region="r", layerset="minimal",
-        pgosm_date="d", srid=3857, files_per_partition=None,
-        overrides={"place_point": pre},
+    out = tmp_path / "a"
+    export_bundle(
+        spark, osm, str(out), region="r", layerset="minimal",
+        pgosm_date="d", srid=3857, place_polygon=pp,
     )
-    got_b = spark.read.parquet(str(tmp_path / "b" / "place_point"))
-    assert got_b.exceptAll(got).count() == 0
-    assert got.exceptAll(got_b).count() == 0
-
-    # ambiguous wkb-only frame: refuse rather than mislabel
-    ambiguous = raw.select("osm_id", "geom_wkb")
-    with pytest.raises(ValueError, match="cannot tell"):
-        export_bundle_routed(
-            spark, osm, str(tmp_path / "c"), region="r", layerset="minimal",
-            pgosm_date="d", srid=3857, files_per_partition=None,
-            overrides={"place_polygon": ambiguous},
-        )
+    got = read_layer_table(
+        spark, str(out / "routed"), "place_polygon", layerset="minimal", srid=3857
+    )
+    want = S.with_projected(pp, 3857)
+    assert sorted(got.columns) == sorted(want.columns)
+    assert got.count() == want.count() > 0
+    assert got.exceptAll(want.select(*got.columns)).count() == 0
+    assert want.select(*got.columns).exceptAll(got).count() == 0

@@ -105,16 +105,15 @@ def test_with_projected_table(spark):
         S.with_projected(place, 32633)
 
 
-def test_project_tables_round_trip_values(spark):
+def test_with_projected_round_trip_values(spark):
     from pgosm_flex_spark import fixtures
     from pgosm_flex_spark.layers import build_layer_tables
 
     osm = fixtures.osm_objects_df(spark)
-    tables = build_layer_tables(osm, layerset="minimal")
-    proj = S.project_tables(tables, 3857)
-    assert set(proj) == set(tables)
-    src = tables["place_point"].select("osm_id", "lon", "lat").toPandas()
-    got = proj["place_point"].select(
+    place = build_layer_tables(osm, layerset="minimal")["place_point"]
+    proj = S.with_projected(place, 3857)
+    src = place.select("osm_id", "lon", "lat").toPandas()
+    got = proj.select(
         "osm_id",
         S.inv_mercator_lon_col(F.col("x")).alias("lon"),
         S.inv_mercator_lat_col(F.col("y")).alias("lat"),
@@ -129,13 +128,13 @@ def test_routed_bundle_3857_read_back(spark, tmp_path):
 
     from pgosm_flex_spark import fixtures
     from pgosm_flex_spark.layers.router import read_layer_table
-    from pgosm_flex_spark.sinks import export_bundle_routed
+    from pgosm_flex_spark.sinks import export_bundle
 
     osm = fixtures.osm_objects_df(spark)
     out = str(tmp_path / "bundle")
-    export_bundle_routed(
+    export_bundle(
         spark, osm, out, region="r", layerset="minimal", pgosm_date="d",
-        srid=3857, files_per_partition=None,
+        srid=3857,
     )
     df = read_layer_table(
         spark, os.path.join(out, "routed"), "place_point",

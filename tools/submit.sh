@@ -2,13 +2,19 @@
 # spark-submit packaging — the north rule's `spark-submit --py-files` path.
 # Zips the library, submits the import job. On a real cluster, swap --master.
 #
-#   tools/submit.sh [extra import_job args...]
+#   tools/submit.sh [out_dir] [extra import_job args...]
+#
+# Defaults follow the host, as session.get_spark does: local[N] over the
+# CPUs this process may run on, and a driver heap of a quarter of RAM.
+# SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM override them.
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
-CPUS="${SPARK_GRAFT_CPUS:-32}"
+CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
+RAM_KB="$(awk '/^MemTotal:/ {print $2}' /proc/meminfo)"
+DRIVER_MEM="${SPARK_GRAFT_DRIVER_MEM:-$(( RAM_KB / 4 / 1048576 > 1 ? RAM_KB / 4 / 1048576 : 1 ))g}"
 # first arg is the output dir ONLY if it is not a flag — so
-# `tools/submit.sh --routed-export` passes the flag through instead of
-# writing a bundle to a directory literally named './--routed-export'
+# `tools/submit.sh --skip-nested` passes the flag through instead of
+# writing a bundle to a directory literally named './--skip-nested'
 OUT="/tmp/pgosm_flex_spark_out"
 if [[ $# -gt 0 && "${1:0:1}" != "-" ]]; then
   OUT="$1"
@@ -20,6 +26,6 @@ ZIP=$(mktemp -d)/pgosm_flex_spark.zip
 
 spark-submit \
   --master "local[$CPUS]" \
-  --driver-memory "${SPARK_GRAFT_DRIVER_MEM:-48g}" \
+  --driver-memory "$DRIVER_MEM" \
   --py-files "$ZIP" \
   "$REPO/jobs/import_job.py" --out "$OUT" --cpus "$CPUS" "$@"
