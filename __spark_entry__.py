@@ -936,7 +936,10 @@ def q_qgis_style_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
           "Normal")],
         schema=LAYER_STYLES_SCHEMA,
     )
-    merged = merge_styles(existing, placeholder_styles_df(spark))
+    merged = spark.createDataFrame(
+        merge_styles(existing.toPandas(), placeholder_styles_df(spark).toPandas()),
+        schema=LAYER_STYLES_SCHEMA,
+    )
     return merged.select(
         "id", "f_table_catalog", "f_table_schema", "f_table_name",
         "f_geometry_column", "stylename", "useasdefault", "description",

@@ -65,15 +65,6 @@ def decode(data: bytes) -> np.ndarray:
     return np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3)
 
 
-def psnr(a: np.ndarray, b: np.ndarray) -> float:
-    """Peak signal-to-noise ratio in dB; inf for identical arrays."""
-    diff = a.astype(np.float64) - b.astype(np.float64)
-    mse = float(np.mean(diff * diff))
-    if mse == 0.0:
-        return float("inf")
-    return 10.0 * np.log10(255.0**2 / mse)
-
-
 def phash(arr: np.ndarray) -> int:
     """Stable signed 64-bit content hash of a decoded pixel array."""
     digest = hashlib.blake2b(

@@ -27,8 +27,7 @@ from collections.abc import Callable, Iterable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 MAX_CONCURRENT_UNITS = 4
 
@@ -66,9 +65,12 @@ class Checkpointer:
     def _append(self, spark: SparkSession, rows: list[tuple]) -> None:
         """Journal rows are driver-written directly with pyarrow (one tiny
         uniquely-named file per append): concurrent unit threads can journal
-        without racing on Spark's shared _temporary commit directory."""
+        without racing on Spark's shared _temporary commit directory. They
+        use the session's parquet codec, like every Spark-written table."""
         import pyarrow as pa
         import pyarrow.parquet as pq
+
+        from pgosm_flex_spark.session import arrow_codec
 
         schema = pa.schema(
             [
@@ -85,7 +87,7 @@ class Checkpointer:
         d = self._journal_dir()
         os.makedirs(d, exist_ok=True)
         tmp = os.path.join(d, f".{uuid.uuid4().hex}.parquet.tmp")
-        pq.write_table(table, tmp)
+        pq.write_table(table, tmp, compression=arrow_codec(spark))
         os.rename(tmp, os.path.join(d, f"journal-{uuid.uuid4().hex}.parquet"))
 
     def mark_completed(
@@ -204,13 +206,13 @@ def checkpointed_pip_join(
             sub, polygons, point_cols=point_cols, cover=cover, res_levels=levels
         )
         target = os.path.join(out_dir, f"unit={unit}")
-        pairs.write.mode("overwrite").parquet(target)
-        try:
-            n = spark.read.parquet(target).count()
-        except AnalysisException:  # zero-row unit: no part files to infer from
-            n = 0  # a TRANSIENT read failure must still raise — the unit
-            # would otherwise be journaled completed with a wrong metric
-        return {"pairs": n}
+        # the pair count is observed by the write: the journal's metric
+        # costs no job of its own
+        n = Observation()
+        pairs.observe(n, F.count(F.lit(1)).alias("pairs")).write.mode(
+            "overwrite"
+        ).parquet(target)
+        return {"pairs": n.get["pairs"]}
 
     results = cp.run_units(spark, sorted(units), process)
     cover.unpersist(blocking=False)

@@ -9,11 +9,15 @@ the reference stores in its import journal (region/layerset/date/row
 counts), which the import job writes as manifest.json — the artifact a
 downstream consumer would sync. Tables derived after the export
 (place_polygon_nested, enrichment outputs) write one directory each via
-:func:`write_layer_table`.
+:func:`write_layer_table`. Every writer counts its rows while it writes
+(``DataFrame.observe``), so a table costs only its write jobs; nothing is
+read back.
 
 With Iceberg jars on the cluster the same writes map to
 ``df.writeTo(tbl).using("iceberg")`` with a sort order on the cell column;
-plain parquet is the sandbox fallback.
+plain parquet is the sandbox fallback. Pages are zstd-compressed, Iceberg's
+default codec (the session's ``spark.sql.parquet.compression.codec``, set
+by session.get_spark).
 """
 
 from __future__ import annotations
@@ -21,9 +25,8 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
 
 from pgosm_flex_spark import __version__
 from pgosm_flex_spark.index import cells
@@ -57,25 +60,22 @@ def write_layer_table(
     'index' analog of the reference's per-table GiST specs,
     /root/reference/flex-config/helpers.lua:442-573).
 
-    Overwrites ``out_dir/name`` and returns the written table's row count."""
+    Overwrites ``out_dir/name`` and returns the written table's row count,
+    observed by the write itself: counting ``df`` would run the whole table
+    pipeline a second time, and reading the output back costs jobs of its
+    own. The partitioning stays one file per task per dir: hash-clustering
+    the enrich tables to ``FILES_PER_DIR`` files split their one-file tables
+    into several, each with its own dictionaries, and stored more bytes."""
     target = os.path.join(out_dir, name)
-    if "lon" in df.columns and "lat" in df.columns:
+    partitioned = "lon" in df.columns and "lat" in df.columns
+    if partitioned:
         df = _with_cell_p(df, cell_res)
-        df.write.mode("overwrite").partitionBy("cell_p").parquet(target)
-    else:
-        df.write.mode("overwrite").parquet(target)
-    # count from the written files: parquet count() is satisfied from
-    # row-group metadata (no data read), while counting ``df`` would run
-    # the whole table pipeline a second time — at scale that doubles the
-    # export's source scans. A zero-row table leaves no parquet files
-    # behind and cannot be re-read without a schema → 0.
-    try:
-        return df.sparkSession.read.parquet(target).count()
-    except AnalysisException:
-        # only the no-files case (schema cannot be inferred / path has
-        # just _SUCCESS); a transient count failure must still raise —
-        # swallowing it would report a written table as 0 rows
-        return 0
+    rows = Observation()
+    writer = df.observe(rows, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
+    if partitioned:
+        writer = writer.partitionBy("cell_p")
+    writer.parquet(target)
+    return rows.get["rows"]
 
 
 def export_bundle(
@@ -119,8 +119,9 @@ def export_bundle(
 
     Bundle name mirrors the reference's dump naming
     (docker/pgosm_flex.py:553-570): <region>-<layerset>-<date>. Per-table
-    counts come from the written parquet's partition dirs and footers (no
-    second pipeline execution); zero-row tables are listed with 0.
+    counts are observed during the write, one ``count_if`` per expected
+    table, so the export runs no job after its write; zero-row tables are
+    listed with 0.
     """
     from pgosm_flex_spark.geometry.srid import with_projected
     from pgosm_flex_spark.layers.registry import _wanted_tables
@@ -142,22 +143,17 @@ def export_bundle(
         F.col("cell_p"),
         F.pmod(F.xxhash64(F.col("osm_id")), F.lit(FILES_PER_DIR)),
     )
+    # the observation sits after the repartition: placed before it, an
+    # empty source left the metrics unset with AQE on, and Observation.get
+    # failed instead of returning zeros
+    tables = Observation()
+    routed = routed.observe(
+        tables, *[F.count_if(F.col("layer_table") == n).alias(n) for n in expected]
+    )
     target = os.path.join(out_dir, "routed")
     routed.write.mode("overwrite").partitionBy("layer_table", "cell_p").parquet(target)
+    counts = tables.get
 
-    counts = {n: 0 for n in expected}
-    # layer_table is a partition column, so this group-count is satisfied
-    # from directory metadata + row-group footers, not a re-run of the
-    # routing pipeline
-    try:
-        for r in spark.read.parquet(target).groupBy("layer_table").count().collect():
-            counts[r["layer_table"]] = r["count"]
-    except AnalysisException:
-        # an empty source writes no partition dirs at all (just
-        # _SUCCESS), which parquet cannot infer a schema from — every
-        # table is 0 rows. Anything else (executor loss, FS hiccup)
-        # must raise, not report a freshly-written bundle as all-zero.
-        pass
     for name in expected:
         stale = os.path.join(out_dir, name)
         if os.path.isdir(stale):

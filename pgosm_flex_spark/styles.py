@@ -9,9 +9,11 @@ customized styles are never overwritten) → clean staging
 (/root/reference/docker/qgis_styles.py:13-29,
 db/qgis-style/_load_layer_styles.sql, create_layer_styles.sql).
 
-Here the prod table is a parquet table in the export bundle and the whole
-load is one anti-join + append. The reference's actual XML payloads are a
-data artifact its repo ships (db/qgis-style/layer_styles.sql) — a user
+Here the prod table is a parquet table in the export bundle, and the load
+is one anti-join + append of a few rows, done on the driver with pandas and
+pyarrow: it runs no Spark job unless the staging styles come from one. The
+reference's actual XML payloads are a data artifact its repo ships
+(db/qgis-style/layer_styles.sql) — a user
 brings that file and :func:`staging_from_pg_dump` ingests it via the
 pg_dump COPY source; :func:`placeholder_styles_df` provides a minimal
 deterministic stand-in (same rows/keys as the reference's four styled
@@ -22,7 +24,12 @@ reference's artwork.
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -33,7 +40,16 @@ LAYER_STYLES_SCHEMA = (
     "description string, owner string, ui string, update_time timestamp, "
     "type string"
 )
-_COLS = [f.split()[0] for f in LAYER_STYLES_SCHEMA.split(", ")]
+# the same schema for the driver-side merge; timestamps are UTC instants,
+# which Spark reads back as ``timestamp``
+_ARROW_TYPES = {
+    "int": pa.int32(), "string": pa.string(), "boolean": pa.bool_(),
+    "timestamp": pa.timestamp("us", tz="UTC"),
+}
+_ARROW_SCHEMA = pa.schema(
+    [(n, _ARROW_TYPES[t]) for n, t in (f.split() for f in LAYER_STYLES_SCHEMA.split(", "))]
+)
+_COLS = _ARROW_SCHEMA.names
 
 # the four (table, stylename) keys the reference styles
 # (db/qgis-style/layer_styles.sql COPY rows 1-4)
@@ -54,8 +70,8 @@ def _stub_qml(table: str) -> str:
     )
 
 
-def placeholder_styles_df(spark: SparkSession) -> DataFrame:
-    rows = [
+def _placeholder_rows() -> list[tuple]:
+    return [
         (
             i + 1, "pgosm", "osm", tbl, "geom", style, _stub_qml(tbl), None,
             True, f"placeholder {style}", "pgosm_flex_spark", None, None,
@@ -63,7 +79,10 @@ def placeholder_styles_df(spark: SparkSession) -> DataFrame:
         )
         for i, (tbl, style) in enumerate(_PLACEHOLDER_KEYS)
     ]
-    return spark.createDataFrame(rows, schema=LAYER_STYLES_SCHEMA)
+
+
+def placeholder_styles_df(spark: SparkSession) -> DataFrame:
+    return spark.createDataFrame(_placeholder_rows(), schema=LAYER_STYLES_SCHEMA)
 
 
 def staging_from_pg_dump(spark: SparkSession, dump_path: str) -> DataFrame:
@@ -82,24 +101,20 @@ def staging_from_pg_dump(spark: SparkSession, dump_path: str) -> DataFrame:
 _MERGE_KEY = ["f_table_catalog", "f_table_schema", "f_table_name", "stylename"]
 
 
-def merge_styles(existing: DataFrame, staging: DataFrame) -> DataFrame:
+def merge_styles(existing: pd.DataFrame, staging: pd.DataFrame) -> pd.DataFrame:
     """The staging→prod insert of _load_layer_styles.sql as a pure frame op:
     keep every existing row untouched; append only staging rows whose
     (catalog, schema, table, stylename) key is absent (LEFT JOIN ... WHERE
-    id IS NULL → left_anti), ids continuing after the existing maximum
-    (SERIAL)."""
-    start = existing.agg(F.coalesce(F.max("id"), F.lit(0))).first()[0]
-    from pyspark.sql import Window
-
-    # metadata-scale table (styles, not corpus rows): the single-partition
-    # id window is deliberate, matching the SERIAL assignment
-    w = Window.orderBy("id", *_MERGE_KEY)
-    fresh = (
-        staging.join(existing.select(*_MERGE_KEY), on=_MERGE_KEY, how="left_anti")
-        .withColumn("id", (F.lit(start) + F.row_number().over(w)).cast("int"))
-        .select(*_COLS)
-    )
-    return existing.select(*_COLS).unionByName(fresh)
+    id IS NULL; a NULL key part never matches), ids continuing after the
+    existing maximum (SERIAL) in staging (id, key) order."""
+    start = existing["id"].max()
+    start = 0 if pd.isna(start) else int(start)
+    present = pd.MultiIndex.from_frame(existing[_MERGE_KEY])
+    keys = staging[_MERGE_KEY]
+    absent = ~pd.MultiIndex.from_frame(keys).isin(present) | keys.isna().any(axis=1)
+    fresh = staging[absent].sort_values(["id", *_MERGE_KEY], na_position="first")
+    fresh = fresh.assign(id=range(start + 1, start + 1 + len(fresh)))
+    return pd.concat([existing[_COLS], fresh[_COLS]], ignore_index=True)
 
 
 def load_qgis_styles(
@@ -115,11 +130,19 @@ def load_qgis_styles(
     retarget ``f_table_catalog`` when ``db_name`` differs from the default
     (update_styles_db_name), then :func:`merge_styles` — a user's
     customized styles are never overwritten.
+
+    The table is read, merged and rewritten on the driver (one file, the
+    session's parquet codec), and the returned frame holds the merged rows
+    as local data.
     """
+    from pgosm_flex_spark.session import arrow_codec
+
     if staging is None:
-        staging = placeholder_styles_df(spark)
+        staged = pd.DataFrame(_placeholder_rows(), columns=_COLS)
+    else:
+        staged = staging.select(*_COLS).toArrow().cast(_ARROW_SCHEMA).to_pandas()
     if db_name != "pgosm":
-        staging = staging.withColumn("f_table_catalog", F.lit(db_name))
+        staged["f_table_catalog"] = db_name
 
     out = os.path.join(bundle_dir, "layer_styles")
     # ONLY a missing table means "fresh load" — any other read failure
@@ -127,19 +150,20 @@ def load_qgis_styles(
     # merge exists to protect customized styles, and treating a failed read
     # as an empty table would let the overwrite below destroy them
     if os.path.isdir(out):
-        existing = spark.read.parquet(out)
+        existing = pq.read_table(out).select(_COLS).cast(_ARROW_SCHEMA).to_pandas()
     else:
-        existing = spark.createDataFrame([], schema=LAYER_STYLES_SCHEMA)
+        existing = _ARROW_SCHEMA.empty_table().to_pandas()
+    merged = pa.Table.from_pandas(
+        merge_styles(existing, staged), schema=_ARROW_SCHEMA, preserve_index=False
+    )
 
-    # the merged plan reads the same parquet dir the overwrite below
-    # replaces — persist + count materializes every block before the files
-    # are touched, and the pin is released on exit instead of orphaning a
-    # checkpoint RDD per call (the sinks.merge_into_partitioned pattern;
-    # eviction-recompute risk is nil for a metadata-scale styles table)
-    merged = merge_styles(existing, staging).persist()
-    try:
-        merged.count()
-        merged.write.mode("overwrite").parquet(out)
-        return spark.read.parquet(out)
-    finally:
-        merged.unpersist(blocking=False)
+    # the new table is complete in its own dir before the old one goes
+    tmp = f"{out}.{uuid.uuid4().hex}.tmp"
+    os.makedirs(tmp)
+    pq.write_table(
+        merged, os.path.join(tmp, "part-00000.parquet"), compression=arrow_codec(spark)
+    )
+    if os.path.isdir(out):
+        shutil.rmtree(out)
+    os.rename(tmp, out)
+    return spark.createDataFrame(merged)

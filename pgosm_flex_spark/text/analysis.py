@@ -9,7 +9,7 @@ check, noted in __spark_entry__.oracle_sql).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # language marker words — tiny deterministic n-gram-style heuristic; the
@@ -116,18 +116,4 @@ def fingerprint(text: Column) -> Column:
         toks,
         F.lit(1469598103934665603).cast("long"),
         lambda acc, w: F.xxhash64(acc, w),
-    )
-
-
-def analyze(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    t = F.col(text_col)
-    return documents.select(
-        "doc_id",
-        token_count(t).alias("n_tokens"),
-        F.length(t).alias("n_chars"),
-        stopword_ratio(t).alias("stop_ratio"),
-        mean_word_len(t).alias("mean_word_len"),
-        quality_score(t).alias("quality"),
-        predict_lang(t).alias("pred_lang"),
-        fingerprint(t).alias("fingerprint"),
     )

@@ -8,6 +8,7 @@ import json
 import os
 import sys
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -43,6 +44,24 @@ def test_create_writes_pairs_and_manifest(spark, job_out):
     assert manifest["pip_units"]["skipped_resume"] == 0
     assert manifest["tables"]["place_polygon"] > 0
     assert spark.read.parquet(*glob.glob(f"{job_out}/image_place_pairs/unit=*")).count() > 0
+
+
+def test_import_outputs_store_zstd_pages(job_out):
+    """Every table the job writes, Spark- or driver-written, stores zstd
+    column chunks (the session's parquet codec)."""
+    import pyarrow.parquet as pq
+
+    for sub in ("routed", "image_place_pairs/unit=*", "image_place_pairs/_journal",
+                "layer_styles"):
+        codecs = []
+        for f in glob.glob(f"{job_out}/{sub}/**/*.parquet", recursive=True):
+            md = pq.ParquetFile(f).metadata
+            codecs += [
+                md.row_group(g).column(c).compression
+                for g in range(md.num_row_groups)
+                for c in range(md.num_columns)
+            ]
+        assert codecs and set(codecs) == {"ZSTD"}, (sub, set(codecs))
 
 
 def test_rerun_without_force_refuses(spark, job_out):
@@ -133,6 +152,10 @@ def test_append_diff_empties_cell_invalidates_stale_output(spark, job_out, tmp_p
     victim_files = glob.glob(f"{job_out}/image_place_pairs/unit={victim}/*.parquet")
     if victim_files:
         assert spark.read.parquet(*victim_files).count() == 0
+    # and the journal records the emptied unit's write as zero pairs
+    journal = pd.read_parquet(f"{job_out}/image_place_pairs/_journal")
+    last = journal[journal["unit"] == str(victim)].sort_values("finished_at").iloc[-1]
+    assert json.loads(last["metrics"]) == {"pairs": 0}
 
     # stored pairs == full recompute over the reduced input
     from pgosm_flex_spark.layers import build_layer_tables

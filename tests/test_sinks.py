@@ -1,8 +1,11 @@
 from __future__ import annotations
 
+import glob
 import os
 
 import pandas as pd
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from pgosm_flex_spark import fixtures
@@ -18,6 +21,62 @@ def test_write_layer_table_cell_partitioned(spark, tmp_path):
     back = spark.read.parquet(str(tmp_path / "poi_combined_point"))
     assert back.count() == n > 0
     assert "cell_p" in back.columns  # partition pruning key
+
+
+def _jobs_of(spark, group, write) -> int:
+    """Spark jobs that ``write()`` launches, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        write()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job events reach the status tracker through the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _codecs(root) -> set[str]:
+    """Compression of every column chunk of every parquet file under ``root``."""
+    return {
+        rg.column(c).compression
+        for f in glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True)
+        for md in [pq.ParquetFile(f).metadata]
+        for rg in map(md.row_group, range(md.num_row_groups))
+        for c in range(rg.num_columns)
+    }
+
+
+@pytest.mark.parametrize("point", [True, False], ids=["cell_partitioned", "plain"])
+def test_write_layer_table_costs_only_its_write(spark, tmp_path, point):
+    """The row count comes from the write itself: write_layer_table launches
+    as many Spark jobs as the frame's bare write, and stores zstd pages."""
+    osm = fixtures.osm_objects_df(spark)
+    poi = build_layer_tables(osm, layerset="minimal")["poi_combined_point"]
+    if not point:
+        poi = poi.drop("lon", "lat")
+    poi = poi.persist()
+    try:
+        want = poi.count()
+        bare = _jobs_of(spark, f"bare-{point}", lambda: poi.write.parquet(str(tmp_path / "bare")))
+        n = []
+        jobs = _jobs_of(
+            spark, f"table-{point}",
+            lambda: n.append(write_layer_table(poi, str(tmp_path), "t")),
+        )
+    finally:
+        poi.unpersist()
+    assert n == [want] and want > 0
+    assert jobs == bare >= 1
+    assert _codecs(str(tmp_path / "t")) == {"ZSTD"}
+
+
+def test_write_layer_table_empty_frame(spark, tmp_path):
+    poi = build_layer_tables(fixtures.osm_objects_df(spark), layerset="minimal")[
+        "poi_combined_point"
+    ].filter("osm_id < -999999999")
+    assert {"lon", "lat"} <= set(poi.columns)
+    assert write_layer_table(poi, str(tmp_path), "empty") == 0
 
 
 def test_layer_table_scan_prunes_partitions(spark, tmp_path):

@@ -159,8 +159,8 @@ def test_load_styles_db_name_retarget(spark, tmp_path):
 
 def test_merge_styles_pure(spark):
     existing = placeholder_styles_df(spark).filter(F.col("id") <= 2)
-    merged = merge_styles(existing, placeholder_styles_df(spark))
-    rows = merged.orderBy("id").collect()
+    merged = merge_styles(existing.toPandas(), placeholder_styles_df(spark).toPandas())
+    rows = [r for _, r in merged.sort_values("id").iterrows()]
     assert [r["id"] for r in rows] == [1, 2, 3, 4]
     assert {r["f_table_name"] for r in rows} == {
         "road_line", "building_polygon", "landuse_polygon", "vplace_polygon",

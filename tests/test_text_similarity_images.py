@@ -26,7 +26,13 @@ def docs(spark):
 
 
 def test_token_count_and_quality(docs):
-    out = analysis.analyze(docs).toPandas().set_index("doc_id")
+    t = F.col("text")
+    out = docs.select(
+        "doc_id",
+        analysis.token_count(t).alias("n_tokens"),
+        analysis.stopword_ratio(t).alias("stop_ratio"),
+        analysis.quality_score(t).alias("quality"),
+    ).toPandas().set_index("doc_id")
     assert out.loc[0, "n_tokens"] == 9
     assert out.loc[5, "n_tokens"] == 1
     # python oracle for stopword ratio of doc 0: the(2) of 9 tokens
@@ -35,7 +41,9 @@ def test_token_count_and_quality(docs):
 
 
 def test_langid(docs):
-    out = analysis.analyze(docs).toPandas().set_index("doc_id")
+    out = docs.select(
+        "doc_id", analysis.predict_lang(F.col("text")).alias("pred_lang")
+    ).toPandas().set_index("doc_id")
     assert out.loc[0, "pred_lang"] == "en"
     assert out.loc[2, "pred_lang"] == "es"
     assert out.loc[3, "pred_lang"] == "und"
@@ -45,7 +53,7 @@ def test_fingerprint_order_sensitive(spark):
     df = spark.createDataFrame(
         pd.DataFrame({"doc_id": [0, 1], "text": ["a b c", "c b a"]})
     )
-    fps = analysis.analyze(df).toPandas()["fingerprint"]
+    fps = df.select(analysis.fingerprint(F.col("text")).alias("fp")).toPandas()["fp"]
     assert fps[0] != fps[1]
 
 
@@ -478,7 +486,7 @@ def test_whitespace_classes_and_adjacent_repeats(spark):
     wrapped = spark.createDataFrame(
         pd.DataFrame({"doc_id": [0, 1], "text": ["a b c d", "a\nb c\td"]})
     )
-    fps = analysis.analyze(wrapped).toPandas()["fingerprint"]
+    fps = wrapped.select(analysis.fingerprint(F.col("text")).alias("fp")).toPandas()["fp"]
     assert fps[0] == fps[1]
 
 
