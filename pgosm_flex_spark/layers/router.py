@@ -79,11 +79,11 @@ def route_layer_rows(
     the whole dispatch stage: where ``build_layer_tables`` + per-table writes
     scan the source once per table (45 passes at 100 TB), this evaluates all
     membership predicates AND all projections in one whole-stage-codegen
-    pass. sinks.export_bundle writes it ``partitionBy("layer_table", ...)``
-    as the export bundle, and each table is a partition-pruned,
-    column-pruned slice with its exact ``build_layer_tables`` schema
-    (``read_layer_table``); absent columns are typed NULLs that parquet
-    stores for free.
+    pass. sinks.export_bundle writes it ``partitionBy("layer_table")``,
+    sorted by cell within each file, as the export bundle, and each table is
+    a partition-pruned, column-pruned slice with its exact
+    ``build_layer_tables`` schema (``read_layer_table``); absent columns are
+    typed NULLs that parquet stores for free.
 
     Column derivation: per superset column, one CASE over the tables that
     define it, grouped by identical expression text — most columns collapse

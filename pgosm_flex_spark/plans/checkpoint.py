@@ -66,7 +66,10 @@ class Checkpointer:
         """Journal rows are driver-written directly with pyarrow (one tiny
         uniquely-named file per append): concurrent unit threads can journal
         without racing on Spark's shared _temporary commit directory. They
-        use the session's parquet codec, like every Spark-written table."""
+        use the session's parquet codec, like every Spark-written table, and
+        store no ``ARROW:schema`` blob: Spark reads the journal with
+        ``JOURNAL_SCHEMA`` and pandas gets the same dtypes from the parquet
+        types."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -87,7 +90,7 @@ class Checkpointer:
         d = self._journal_dir()
         os.makedirs(d, exist_ok=True)
         tmp = os.path.join(d, f".{uuid.uuid4().hex}.parquet.tmp")
-        pq.write_table(table, tmp, compression=arrow_codec(spark))
+        pq.write_table(table, tmp, compression=arrow_codec(spark), store_schema=False)
         os.rename(tmp, os.path.join(d, f"journal-{uuid.uuid4().hex}.parquet"))
 
     def mark_completed(
@@ -205,6 +208,10 @@ def checkpointed_pip_join(
         pairs = pip_join(
             sub, polygons, point_cols=point_cols, cover=cover, res_levels=levels
         )
+        # one rebalance shuffle, which AQE coalesces, so the unit commits
+        # one file (a split only past the advisory size) whose row order
+        # does not depend on task timing; the join itself stays parallel
+        pairs = pairs.hint("rebalance").sortWithinPartitions("osm_id", *point_cols)
         target = os.path.join(out_dir, f"unit={unit}")
         # the pair count is observed by the write: the journal's metric
         # costs no job of its own

@@ -3,11 +3,12 @@
 The reference bulk-loads typed tables into PostGIS and optionally pg_dumps
 the schema to a dated artifact (/root/reference/docker/db.py:615-647, name
 derivation docker/pgosm_flex.py:367-416). Here an export bundle is one
-routed parquet directory holding every layer table, partitioned by
-``(layer_table, cell_p)`` for table and cell pruning, plus the run metadata
-the reference stores in its import journal (region/layerset/date/row
-counts), which the import job writes as manifest.json — the artifact a
-downstream consumer would sync. Tables derived after the export
+routed parquet directory holding every layer table, one partition dir per
+table with its rows sorted by cell (table pruning by directory, cell
+pruning by parquet statistics), plus the run metadata the reference stores
+in its import journal (region/layerset/date/row counts), which the import
+job writes as manifest.json — the artifact a downstream consumer would
+sync. Tables derived after the export
 (place_polygon_nested, enrichment outputs) write one directory each via
 :func:`write_layer_table`. Every writer counts its rows while it writes
 (``DataFrame.observe``), so a table costs only its write jobs; nothing is
@@ -31,15 +32,13 @@ from pyspark.sql import functions as F
 from pgosm_flex_spark import __version__
 from pgosm_flex_spark.index import cells
 
-# partition-key cell resolution of every written table
+# cell resolution of every written table's cell_p column
 CELL_RES = 8
-# most parquet files the bundle export writes into one partition dir
-FILES_PER_DIR = 4
 
 
 def _with_cell_p(df: DataFrame, cell_res: int) -> DataFrame:
     """``cell_p``: the coarse cell of a row's point location, -1 without
-    one — the partition key."""
+    one — the pruning key."""
     return df.withColumn(
         "cell_p",
         F.when(
@@ -63,9 +62,9 @@ def write_layer_table(
     Overwrites ``out_dir/name`` and returns the written table's row count,
     observed by the write itself: counting ``df`` would run the whole table
     pipeline a second time, and reading the output back costs jobs of its
-    own. The partitioning stays one file per task per dir: hash-clustering
-    the enrich tables to ``FILES_PER_DIR`` files split their one-file tables
-    into several, each with its own dictionaries, and stored more bytes."""
+    own. The write adds no shuffle, so it stays one file per task per dir:
+    clustering the enrich tables split their one-file tables into several,
+    each with its own dictionaries, and stored more bytes."""
     target = os.path.join(out_dir, name)
     partitioned = "lon" in df.columns and "lat" in df.columns
     if partitioned:
@@ -97,12 +96,15 @@ def export_bundle(
 
     layers/router.py:route_layer_rows evaluates all membership predicates
     and all projections in one whole-stage-codegen pass; the superset is
-    written to ``out_dir/routed`` partitioned by ``(layer_table, cell_p)``,
-    and each table is a partition-pruned, column-pruned slice (read it back
-    with router.read_layer_table). One clustering shuffle keyed
-    ``(layer_table, cell_p, salt)`` bounds every partition dir to at most
-    ``FILES_PER_DIR`` files, where a dynamic-partition write would emit one
-    file per (task × dir it touches).
+    written to ``out_dir/routed`` partitioned by ``layer_table``, and each
+    table is a partition-pruned, column-pruned slice (read it back with
+    router.read_layer_table). One rebalance shuffle keyed by ``layer_table``
+    sends each table to one reduce partition, which AQE coalesces with other
+    small tables or splits at its advisory size, so a table is one file
+    unless it is large; a dynamic-partition write without it emits one file
+    per (task × dir it touches). Within a file rows are sorted by
+    ``cell_p`` (Iceberg's sort order on the cell column), so a cell filter
+    skips row groups through parquet statistics.
 
     ``place_polygon``: the post-processed table (relation_member_dedup of
     the raw slice). When given, it replaces the router's raw
@@ -138,20 +140,20 @@ def export_bundle(
             place_polygon.select(F.lit("place_polygon").alias("layer_table"), "*"),
             allowMissingColumns=True,
         )
-    routed = _with_cell_p(with_projected(routed, srid), CELL_RES).repartition(
-        F.col("layer_table"),
-        F.col("cell_p"),
-        F.pmod(F.xxhash64(F.col("osm_id")), F.lit(FILES_PER_DIR)),
+    routed = (
+        _with_cell_p(with_projected(routed, srid), CELL_RES)
+        .hint("rebalance", "layer_table")
+        .sortWithinPartitions("layer_table", "cell_p")
     )
-    # the observation sits after the repartition: placed before it, an
-    # empty source left the metrics unset with AQE on, and Observation.get
-    # failed instead of returning zeros
+    # the observation sits after the shuffle: placed before it, an empty
+    # source left the metrics unset with AQE on, and Observation.get failed
+    # instead of returning zeros
     tables = Observation()
     routed = routed.observe(
         tables, *[F.count_if(F.col("layer_table") == n).alias(n) for n in expected]
     )
     target = os.path.join(out_dir, "routed")
-    routed.write.mode("overwrite").partitionBy("layer_table", "cell_p").parquet(target)
+    routed.write.mode("overwrite").partitionBy("layer_table").parquet(target)
     counts = tables.get
 
     for name in expected:

@@ -64,6 +64,22 @@ def test_import_outputs_store_zstd_pages(job_out):
         assert codecs and set(codecs) == {"ZSTD"}, (sub, set(codecs))
 
 
+def test_unit_commits_one_sorted_file(job_out):
+    """Each checkpoint unit's pairs are rebalanced and sorted before the
+    write: one parquet file per ``unit=*`` dir, ordered by
+    ``(osm_id, image_id)`` whatever the task timing."""
+    import pyarrow.parquet as pq
+
+    dirs = glob.glob(f"{job_out}/image_place_pairs/unit=*")
+    assert dirs
+    for d in dirs:
+        files = glob.glob(f"{d}/*.parquet")
+        assert len(files) == 1, (d, files)
+        t = pq.read_table(files[0], columns=["osm_id", "image_id"])
+        keys = list(zip(t["osm_id"].to_pylist(), t["image_id"].to_pylist()))
+        assert keys == sorted(keys), d
+
+
 def test_rerun_without_force_refuses(spark, job_out):
     rc = run_job(
         ["--out", job_out, "--n-images", "2000", "--layerset", "minimal",

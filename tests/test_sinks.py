@@ -215,14 +215,51 @@ def test_export_bundle_routed_parity(spark, tmp_path):
     # every table lives under routed/, none in a per-table dir
     assert not [n for n in tables if (out / n).exists()]
 
-    # output clustering: the salted repartition bounds files per partition
-    # dir at FILES_PER_DIR (4) — without it a dynamic write emits one file
+    # output clustering: the rebalance on layer_table leaves one file per
+    # table dir at fixture size — without it a dynamic write emits one file
     # per task × dir (small-file explosion at scale)
-    import glob
-
-    for d in glob.glob(str(out / "routed" / "layer_table=*/cell_p=*")):
+    dirs = glob.glob(str(out / "routed" / "layer_table=*"))
+    assert len(dirs) == sum(1 for v in want_counts.values() if v)
+    for d in dirs:
         n_files = len(glob.glob(os.path.join(d, "*.parquet")))
-        assert 1 <= n_files <= 4, f"{d}: {n_files} files"
+        assert n_files == 1, f"{d}: {n_files} files"
+
+
+def test_export_bundle_routed_sorted_by_cell(spark, tmp_path):
+    """The routed bundle is partitioned by table only; ``cell_p`` is a data
+    column sorted within each file (Iceberg's sort order on the cell), so a
+    cell filter is pushed into the parquet scan, where row-group statistics
+    prune, and a table filter prunes directories."""
+    osm = fixtures.osm_objects_df(spark)
+    out = tmp_path / "bundle"
+    export_bundle(
+        spark, osm, str(out), region="dc", layerset="minimal",
+        pgosm_date="2026-01-01",
+    )
+    routed = out / "routed"
+    files = glob.glob(str(routed / "layer_table=*" / "*.parquet"))
+    assert files
+    for f in files:
+        cell = pq.read_table(f, columns=["cell_p"])["cell_p"].to_pylist()
+        assert cell == sorted(cell), f
+
+    back = spark.read.parquet(str(routed))
+    target = back.filter(F.col("cell_p") >= 0).select("layer_table", "cell_p").first()
+    q = back.filter(
+        (F.col("layer_table") == target["layer_table"])
+        & (F.col("cell_p") == target["cell_p"])
+    )
+    plan = q._jdf.queryExecution().executedPlan().toString()
+    pushed = plan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
+    part = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+    assert "cell_p" in pushed and "layer_table" not in pushed, plan[:1500]
+    assert "layer_table" in part and "cell_p" not in part, plan[:1500]
+    expected = sum(
+        1
+        for r in back.select("layer_table", "cell_p").collect()
+        if (r["layer_table"], r["cell_p"]) == (target["layer_table"], target["cell_p"])
+    )
+    assert q.count() == expected > 0
 
 
 def test_export_bundle_removes_stale_per_table_dirs(spark, tmp_path):
